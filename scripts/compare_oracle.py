@@ -37,13 +37,19 @@ def canon(df):
 def _keycell(v):
     # canonical, dtype-independent repr so int64 12 and float64 12.0 sort
     # identically in both frames (ties on other columns would otherwise
-    # pair rows differently and fake a mismatch)
+    # pair rows differently and fake a mismatch). Fractional numbers are
+    # quantized to 10 significant digits (the rtol=1e-9 value compare
+    # below) and -0.0 folds into 0.0, so two cells equal within tolerance
+    # get the same key and pair the same way in both frames; integral
+    # values keep an exact key, so large ids never collide. Only the
+    # pairing uses the key; values are still compared at full precision.
     if v is None or (isinstance(v, float) and np.isnan(v)):
         return "\x00"
     if isinstance(v, (bool, np.bool_)):
         return "b%d" % int(v)
     if isinstance(v, (int, float, np.integer, np.floating)):
-        return "n%+.17e" % float(v)
+        f = float(v) + 0.0
+        return ("n%+.17e" if f.is_integer() else "n%+.9e") % f
     return "s" + str(v)
 
 def sort_rows(df):

@@ -40,6 +40,11 @@ final class CsrAggBuf(var seen: Array[Int], var len: Int) {
   * Output: struct<n_turns:int, n_edges:int, min_idx:int, max_idx:int,
   * contiguous:boolean> — same fields, types and values as the old
   * `CsrOut`.
+  *
+  * Rows whose `turn_idx` is null are skipped (`update` appends only
+  * non-null values), so they count toward no shape. The driver feed
+  * never yields one: [[graft.schema.Turn]]'s `turn_idx` is a non-null
+  * `Int`, and the turn derivation ranks every row.
   */
 case class CsrShapeAgg(
     child: Expression,

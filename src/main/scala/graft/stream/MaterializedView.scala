@@ -79,12 +79,17 @@ object MaterializedView {
     val fresh = delta.dropDuplicates("conv_id")
       .withColumn("bucket", bucketOf("conv_id"))
       .localCheckpoint(true)
-    if (fresh.isEmpty) return
     // existence via the path's Hadoop FileSystem, not java.nio — a
     // non-local scheme would otherwise always take the create branch and
     // overwrite the whole view with just the delta
     val p = new Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fresh.isEmpty) {
+      // an empty FIRST delta still creates the table (one typed, empty
+      // bucket), so a view over no input reads back as zero rows
+      if (!fs.exists(p)) fresh.drop("bucket").write.parquet(s"$tablePath/bucket=0")
+      return
+    }
     val writer = fresh.write.partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
     if (!fs.exists(p)) { writer.mode(SaveMode.Overwrite).parquet(tablePath); return }

@@ -26,7 +26,7 @@ class StreamFeedSpec extends SparkSuite {
   for (sf <- Seq("sf0.001", "sf0.01")) {
     test(s"driver-side incDocs feed == distributed derivation at $sf") {
       val dir = s"/root/testdata/$sf"
-      val fast = graft.SparkEntry.incDocsRows(spark, dir).toSeq
+      val fast = graft.queries.StreamQueries.incDocsRows(spark, dir).toSeq
       val d = spark.read.parquet(s"$dir/documents.parquet")
       val base = d.select(col("doc_id").as("b_id"), col("text").as("b_text"))
       val prev = d.select(col("doc_id").as("p_id"), col("text").as("p_text"))
@@ -49,7 +49,7 @@ class StreamFeedSpec extends SparkSuite {
   for (sf <- Seq("sf0.001", "sf0.01")) {
     test(s"driver-side feed == distributed Turn derivation at $sf") {
       val dir = s"/root/testdata/$sf"
-      val fast = graft.SparkEntry.streamFeed(spark, dir)
+      val fast = graft.queries.StreamQueries.streamFeed(spark, dir)
       val slow = viaDistributed(dir)
       assert(fast.length == slow.size, "row count differs")
       assert(fast.toSet == slow, "turn sets differ")

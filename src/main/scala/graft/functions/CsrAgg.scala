@@ -25,9 +25,10 @@ final class CsrAggBuf(var seen: Array[Int], var len: Int) {
 }
 
 /** Per-conversation CSR shape as a Catalyst [[TypedImperativeAggregate]] —
-  * the InternalRow-level twin of the typed `ConvCsrAggregator` it
-  * replaced in q_csr_agg (identical output: same [[CsrState.csrOf]]
-  * derivation, pinned row-for-row in CsrAggSpec). The typed path paid a
+  * the InternalRow-level twin of the typed `graft.ops.ConvCsrAggregator`
+  * it replaced in q_csr_agg, the reference implementation kept in the
+  * test sources (identical output: same [[CsrState.csrOf]] derivation,
+  * pinned row-for-row in CsrAggSpec). The typed path paid a
   * per-row encoder round-trip that deserialized the ENTIRE Turn — conv_id,
   * role, text, tool, ts — to read one Int, and its `.as[Turn]` blocked
   * column pruning, so the full turn text was carried through the

@@ -20,8 +20,9 @@ final class TopKBuf(val k: Int) {
   val sims = new Array[Double](k)
   var size = 0
 
-  /** Same total order as [[graft.ops.TopKByScore]]: NaN keys never rank
-    * (deterministic contract); ties on key break by ascending id.
+  /** Same total order as the typed `graft.ops.TopKByScore`: NaN keys
+    * never rank (deterministic contract); ties on key break by ascending
+    * id.
     */
   def insert(key: Double, id: Long, sim: Double): Unit = {
     if (key.isNaN) return
@@ -43,8 +44,9 @@ final class TopKBuf(val k: Int) {
 }
 
 /** Bounded per-group top-k as a Catalyst [[TypedImperativeAggregate]] —
-  * the InternalRow-level twin of [[graft.ops.TopKByScore]] (identical
-  * ordering contract, pinned against it in TopKAggSpec). The typed
+  * the InternalRow-level twin of the typed `graft.ops.TopKByScore`, the
+  * reference implementation kept in the test sources (identical ordering
+  * contract, pinned against it in TopKAggSpec and KernelProps). The typed
   * Aggregator paid a per-row encoder round-trip (ScoredRow
   * deserialization + an immutable Seq rebuild per insert) that dominated
   * the all-pairs kNN stage; this update path reads the three input fields

@@ -64,21 +64,18 @@ object TranscriptSink {
       // path it is about to rewrite (read-overwrite-same-path hazard).
       val merged = existing.select(incoming.columns.map(col): _*)
         .unionByName(fresh).localCheckpoint(true)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        merged
-          .sortWithinPartitions("conv_id", "turn_idx")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("day")
-          .parquet(tablePath)
-      finally prev.foreach(
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+      // dynamic overwrite per write, not via the session conf: only the
+      // merged day partitions are replaced, and concurrent writers on the
+      // same session keep their own overwrite mode
+      merged
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(tablePath)
     }
 
-    lineagePath.foreach { lp =>
-      Lineage.record(spark, lp, batchId, withDay)
-    }
+    lineagePath.foreach(Lineage.record(_, batchId, withDay))
   }
 
   /** day=... partition values currently present in the table directory. */
@@ -112,24 +109,18 @@ object TranscriptSink {
   * (partitioned by batch_id; replaying a batch overwrites its own rows).
   */
 object Lineage {
-  def record(spark: SparkSession, lineagePath: String, batchId: Long,
-             batchWithDay: DataFrame): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      batchWithDay
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("row_count"),
-             min("ts").as("min_ts"), max("ts").as("max_ts"),
-             countDistinct("conv_id").as("n_convs"))
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("written_at", current_timestamp())
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("batch_id")
-        .parquet(lineagePath)
-    finally prev.foreach(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
+  def record(lineagePath: String, batchId: Long, batchWithDay: DataFrame): Unit =
+    batchWithDay
+      .groupBy(col("day"))
+      .agg(count(lit(1)).as("row_count"),
+           min("ts").as("min_ts"), max("ts").as("max_ts"),
+           countDistinct("conv_id").as("n_convs"))
+      .withColumn("batch_id", lit(batchId))
+      .withColumn("written_at", current_timestamp())
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(lineagePath)
 
   def read(spark: SparkSession, lineagePath: String): DataFrame =
     spark.read.parquet(lineagePath)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deep/wide iterative-kernel benchmark: multi-source BFS over a bundle
@@ -28,12 +27,7 @@ object DeepBench {
   def run(): String = {
     val L = sys.env.getOrElse("GRAFT_LAYERS", "60").toInt
     val W = sys.env.getOrElse("GRAFT_WIDTH", "20000").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
     val edges = spark.range(0L, (L - 1).toLong * W).select(
       concat(lit("l"), (col("id") / W).cast("long"), lit("_"),
              pmod(col("id"), lit(W))).as("src"),
@@ -57,7 +51,8 @@ object DeepBench {
     val (tFull, n2, s2) = run(directed = true)
     require(n1 == n2 && s1 == s2,
       s"frontier/full disagree: ($n1,$s1) vs ($n2,$s2)")
-    val line = f"""{"metric":"deep_bfs","layers":$L,"width":$W,""" +
+    val line = f"""{"metric":"deep_bfs","cpus":${ToolSession.cpus},""" +
+      f""""layers":$L,"width":$W,""" +
       f""""state_rows":$n1,"frontier_filter_sec":$tFrontier%.2f,""" +
       f""""full_state_filter_sec":$tFull%.2f,""" +
       f""""speedup":${tFull / tFrontier}%.2f}"""

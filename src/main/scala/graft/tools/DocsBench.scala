@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * scan), then runs exact dedup, the MinHash near-dup pipeline, and the
   * end-to-end corpus-filter funnel, reporting docs/sec. One parallelism
   * leg per invocation (the [[Scaling]] convention — run at
-  * GRAFT_DOCS_CPUS=8 and 32 for the N→4N pair).
+  * SPARK_GRAFT_CPUS=N and 4N for the N→4N pair; see [[ToolSession]]).
   *
-  * Knobs: GRAFT_DOCS_N (default 1,000,000), GRAFT_DOCS_CPUS (default 8),
-  * GRAFT_DOCS_OUT (JSON line mirror, default /tmp/docsbench.json).
+  * Knobs: GRAFT_DOCS_N (default 1,000,000), GRAFT_DOCS_OUT (JSON line
+  * mirror, default /tmp/docsbench.json).
   *
   * Corpus structure (all by id arithmetic, so every leg sees identical
   * bytes): every 17th doc is a NEAR dup of its predecessor (same seed,
@@ -63,16 +63,8 @@ object DocsBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("GRAFT_DOCS_N", "1000000").toLong
-    val cpus = sys.env.getOrElse("GRAFT_DOCS_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-docsbench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession()
     // v2: versioned fixture dir — a pre-existing 8-file v1 layout would
     // silently reuse the old scan ceiling the 64-file repartition fixed
     val path = s"/tmp/graft_docsbench/v2/$n"

@@ -5,7 +5,8 @@ package graft.tools
   * filter A/B), the graft side of the head-to-head ([[HeadToHead]]) on a
   * reduced-size input, and the reference library itself (python3,
   * in-process import of /root/reference — the same protocol BENCH.md
-  * records) on the IDENTICAL file. Emits one JSON line per experiment to
+  * records) on the IDENTICAL file. Emits one JSON line per experiment (an
+  * `{"metric":…,"error":…}` line for an experiment that fails) to
   * stdout and appends them to `GRAFT_EVIDENCE_OUT` (default
   * EVIDENCE.json), so the committed evidence regenerates with:
   *
@@ -23,9 +24,9 @@ object Evidence {
     val gfa = sys.env.getOrElse("GRAFT_GFA", s"/tmp/bench_big_$h2hN.gfa")
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    if (!skip("deep")) lines += DeepBench.run()
-    if (!skip("h2h")) lines += HeadToHead.run(h2hN)
-    if (!skip("ref")) lines += referenceSide(gfa)
+    if (!skip("deep")) lines += leg("deep_bfs")(DeepBench.run())
+    if (!skip("h2h")) lines += leg("head_to_head")(HeadToHead.run(h2hN))
+    if (!skip("ref")) lines += leg("head_to_head_reference")(referenceSide(gfa))
 
     val out = sys.env.getOrElse("GRAFT_EVIDENCE_OUT", "EVIDENCE.json")
     lines.foreach(println)
@@ -35,6 +36,16 @@ object Evidence {
       System.err.println(s"[evidence] could not write $out: ${e.getMessage}")
     }
   }
+
+  /** One experiment's line, or its error line when the experiment throws,
+    * so a failed leg never costs the other legs' results.
+    */
+  private def leg(metric: String)(run: => String): String =
+    try run catch { case e: Throwable =>
+      val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+      s"""{"metric":"$metric","error":"${msg.linesIterator.take(1).mkString
+        .replace("\\", "/").replace("\"", "'")}"}"""
+    }
 
   /** Time the reference's compute_stats + genome_distance_matrix(min) on
     * `gfa` via python3 (sys.path import — no install step), returning its
@@ -72,7 +83,7 @@ object Evidence {
     errDrain.join(10000)
     if (code != 0 || out.isEmpty)
       s"""{"metric":"head_to_head_reference","file":"$gfa","error":"exit $code: ${
-        err.linesIterator.take(1).mkString.replace("\"", "'")}"}"""
+        err.linesIterator.toSeq.lastOption.getOrElse("").replace("\"", "'")}"}"""
     else out.linesIterator.toSeq.last
   }
 }

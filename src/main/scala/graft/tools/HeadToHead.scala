@@ -55,49 +55,25 @@ object HeadToHead {
       if (n > 0) s"/tmp/bench_big_$n.gfa" else "/tmp/bench_big.gfa")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
       if (n > 0) writeBigGfa(path, n) else writeBigGfa(path)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    implicit val s: SparkSession = spark
-    // warmup: small slice of the same plan shapes
-    val drb1 = "/root/reference/tests/data/DRB1-3123_unsorted.gfa"
-    GfaAnalysis.computeStats(GfaGraph.readLines(spark, drb1)).collect()
+    implicit val spark: SparkSession = ToolSession()
+    // warmup: the same plan shapes on a small generated input
+    val warm = java.nio.file.Files.createTempFile("h2h_warmup", ".gfa")
+    try {
+      writeBigGfa(warm.toString, n = 3000, p = 3, plen = 100)
+      GfaAnalysis.computeStats(GfaGraph.readLines(spark, warm.toString)).collect()
+    } finally java.nio.file.Files.delete(warm)
 
     val lines = GfaGraph.readLines(spark, path)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     lines.count()
-    if (sys.env.contains("GRAFT_PHASES")) {
-      // stats decomposition (dev): where do the seconds go?
-      import graft.gfa.GfaOptions
-      val opts = GfaOptions(directed = true)
-      def t[A](l: String)(f: => A): A = {
-        val s0 = System.nanoTime(); val r = f
-        println(f"[h2h] $l: ${(System.nanoTime() - s0) / 1e9}%.1f s"); r
-      }
-      val nodes = GfaGraph.nodes(lines, opts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val edges = GfaGraph.edges(lines, opts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t("nodes.count")(nodes.count())
-      t("edgeCount")(graft.graph.Graph.edgeCount(edges, directed = true))
-      t("components")(graft.graph.Graph.connectedComponents(
-        edges, Some(nodes)).agg(org.apache.spark.sql.functions.countDistinct("label")).collect())
-      t("maxDegree")(graft.graph.Graph.degrees(edges, directed = true)
-        .agg(org.apache.spark.sql.functions.max("degree")).collect())
-      t("pathCount")(GfaGraph.pathCount(lines))
-      nodes.unpersist(false); edges.unpersist(false)
-    }
     val t0 = System.nanoTime()
     val st = GfaAnalysis.computeStats(lines).collect()(0)
     val tStats = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val m = GfaAnalysis.genomeDistanceMatrix(lines, "min").collect()
     val tDm = (System.nanoTime() - t1) / 1e9
-    val line = f"""{"metric":"head_to_head","file":"$path","cpus":$cpus,""" +
+    val line = f"""{"metric":"head_to_head","file":"$path",""" +
+      f""""cpus":${ToolSession.cpus},""" +
       f""""stats_sec":$tStats%.1f,"dm_sec":$tDm%.1f,""" +
       f""""nodes":${st.getLong(0)},"edges":${st.getLong(1)},""" +
       f""""paths":${st.getLong(2)},"components":${st.getLong(3)},""" +

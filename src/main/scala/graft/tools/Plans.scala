@@ -2,29 +2,47 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 
-/** Dumps formatted physical plans for the flagship queries → PLANS.md,
-  * the plan-quality evidence (pushdown, broadcast, codegen spans).
+/** Plan-quality evidence in one pass over every query in
+  * [[graft.SparkEntry.queries]]: writes `PLANS.md` to the working
+  * directory with the red-flag table for every query and the formatted
+  * physical plans (pushdown, broadcast, codegen spans) of the queries
+  * named as arguments, by default the flagship set. A before/after
+  * comparison is a `git diff PLANS.md`.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.Plans [query ...]"
   */
 object Plans {
+  val flagship = Seq(
+    "q_stats", "q_conv_edges", "q_sessions", "q_turn_rate", "q_pairing",
+    "q_mkt_orders", "q_node_index", "q_knn_lsh", "q_doc_dedup", "q_coo_sym",
+    "q_minhash_neardups", "q_emb_neardups")
+
+  /** Red flags of one executed plan: a single-partition exchange funnels
+    * all data through one task (the scale-killer class); cartesian
+    * products and broadcast nested-loop joins are flagged for eyeball
+    * review (the brute-kNN one is by design).
+    */
+  final case class RedFlags(singlePartition: Int, cartesian: Int, nestedLoop: Int)
+
+  def redFlags(plan: SparkPlan): RedFlags = {
+    val text = plan.toString
+    def n(op: String) = op.r.findAllIn(text).length
+    RedFlags(n("Exchange SinglePartition"), n("CartesianProduct"),
+             n("BroadcastNestedLoopJoin"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val wanted = if (args.isEmpty) flagship else args.toSeq
+    val unknown = wanted.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = ToolSession()
 
-    // automated red-flag audit over EVERY query's physical plan: a
-    // single-partition exchange funnels all data through one task (the
-    // scale-killer class); cartesian products and nested-loop joins are
-    // flagged for eyeball review (the brute-kNN one is by design)
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans (round 7, sf0.01, AQE on)\n\n")
+    sb.append(s"# PLANS — formatted physical plans " +
+      s"(${Paths.get(sfDir).getFileName}, local[${ToolSession.cpus}], AQE on)\n\n")
     sb.append("Generated by `graft.tools.Plans`. Things to check per plan:\n")
     sb.append("filters/column pruning reach the parquet scan (PushedFilters/\n")
     sb.append("ReadSchema), small sides broadcast, WholeStageCodegen spans wide,\n")
@@ -32,14 +50,13 @@ object Plans {
     sb.append("## Red-flag audit (all queries)\n\n")
     sb.append("| query | SinglePartition exchanges | cartesian | bcast-NLJ |\n")
     sb.append("|---|---|---|---|\n")
+    val formatted = scala.collection.mutable.Map.empty[String, String]
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        def n(p: String) = p.r.findAllIn(plan).length
-        val sp = n("Exchange SinglePartition")
-        val cp = n("CartesianProduct")
-        val nlj = n("BroadcastNestedLoopJoin")
-        sb.append(s"| $name | $sp | $cp | $nlj |\n")
+        val qe = fn(spark, sfDir).queryExecution
+        val f = redFlags(qe.executedPlan)
+        sb.append(s"| $name | ${f.singlePartition} | ${f.cartesian} | ${f.nestedLoop} |\n")
+        if (wanted.contains(name)) formatted(name) = qe.explainString(FormattedMode)
       } catch { case e: Throwable =>
         sb.append(s"| $name | plan error: ${e.getClass.getSimpleName} | | |\n")
       }
@@ -73,18 +90,10 @@ object Plans {
         |""".stripMargin)
     sb.append("\n")
 
-    val interesting = Seq(
-      "q_stats", "q_conv_edges", "q_sessions", "q_turn_rate", "q_pairing",
-      "q_mkt_orders", "q_node_index", "q_knn_lsh", "q_doc_dedup", "q_coo_sym",
-      "q_minhash_neardups", "q_emb_neardups")
-    interesting.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("\n```\n\n")
+    wanted.filter(formatted.contains).foreach { name =>
+      sb.append(s"## $name\n\n```\n${formatted(name)}\n```\n\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
     spark.stop()
   }

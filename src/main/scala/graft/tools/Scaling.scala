@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gen.DistributedTranscripts
@@ -10,16 +9,17 @@ import graft.stream.{CepQueries, Metrics, TranscriptSink}
 
 /** Scaling-efficiency evidence runner (BASELINE.md protocol): runs the
   * SAME ingest-to-sink streaming job on the SAME pre-generated input at a
-  * given parallelism (`SPARK_GRAFT_CPUS`), printing one JSON line with
-  * sustained turns/sec and session-window p95 latency. A wrapper runs it
-  * at 8 and 32 cores (N vs 4N) and computes efficiency = (T8/T32)/4.
+  * given parallelism ([[ToolSession]]: `SPARK_GRAFT_CPUS`, else the host's
+  * cores), printing one JSON line with sustained turns/sec and
+  * session-window p95 latency. A wrapper runs it at N and 4N cores and
+  * computes efficiency = (T_N/T_4N)/4.
   *
   * Generation is done once (deterministic, seed 42) into
   * /tmp/graft_scale/turns so both runs read identical bytes.
   */
 object Scaling {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = ToolSession.cpus
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_CONVS", "120000").toLong
     val baseTurns = sys.env.getOrElse("SPARK_GRAFT_TURNS", "24").toInt
     // experiment knobs: trigger batch size (state commits are per
@@ -34,15 +34,7 @@ object Scaling {
     val inputDir = sys.env.getOrElse("SPARK_GRAFT_INPUT", "/tmp/graft_scale/turns")
     val workDir = Files.createTempDirectory("graft_scaling").toString
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     if (!Files.exists(Paths.get(inputDir))) {
       // range-partition by event time: file order == event-time order, as

@@ -16,6 +16,10 @@ import graft.stream.CsrState
   * finish. The previous `(seen :+ x).distinct` re-scanned the array per
   * ROW — O(n²) per key, ~12.5M array walks for one 5k-turn hot
   * conversation.
+  *
+  * Test-side reference implementation: the engine runs its imperative
+  * twin [[graft.functions.CsrShapeAgg]], pinned against this in
+  * CsrAggSpec, CsrParitySpec and ResumeSpec.
   */
 case class CsrBuf(seen: Array[Int], len: Int)
 case class CsrOut(n_turns: Int, n_edges: Int, min_idx: Int, max_idx: Int,

@@ -20,6 +20,10 @@ case class TopEntry(key: Double, nbr_id: Long, sim: Double)
   * a 100 TB shuffle at corpus scale. The total order (score desc, id asc)
   * makes the result identical to a row_number window over the full pair
   * set (tested against it in KnnSpec).
+  *
+  * Test-side reference implementation: the engine runs its imperative
+  * twin [[graft.functions.TopKByScoreAgg]], pinned against this in
+  * TopKAggSpec and KernelProps.
   */
 class TopKByScore(k: Int) extends Aggregator[ScoredRow, Seq[TopEntry], Seq[TopEntry]] {
 

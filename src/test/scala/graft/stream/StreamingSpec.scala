@@ -265,6 +265,23 @@ class StreamingSpec extends SparkSuite {
     val perBatch = lin.groupBy("batch_id").agg(sum("row_count").as("rows"))
       .collect().map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("rows")).toMap
     assert(perBatch(0L) == b1.count() && perBatch(1L) == b2.count())
+
+    // a two-day batch where only day 0 merges (day 1 is new): the merge
+    // overwrites day 0 alone, so the appended day 1 and the untouched
+    // day 2 survive, and the session's overwrite mode is left as found
+    def turn(c: String, i: Int, day: Int) = Turn(c, i, "user", "x", None,
+      new Timestamp(1700000000000L + day * 86400000L))
+    val table2 = s"$dir/table2"
+    TranscriptSink.upsertBatch(spark, table2,
+      Seq(turn("a", 0, 0), turn("b", 0, 2)).toDF(), 0L)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val mode = spark.conf.getOption(modeKey)
+    TranscriptSink.upsertBatch(spark, table2,
+      Seq(turn("a", 0, 0), turn("a", 1, 0), turn("c", 0, 1)).toDF(), 1L)
+    assert(spark.conf.getOption(modeKey) == mode)
+    val keys = spark.read.parquet(table2).select("conv_id", "turn_idx")
+      .as[(String, Int)].collect().toSet
+    assert(keys == Set(("a", 0), ("a", 1), ("b", 0), ("c", 0)))
   }
 
   test("T2 watermark: late rows are dropped and counted") {

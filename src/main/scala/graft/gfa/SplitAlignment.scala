@@ -21,41 +21,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object SplitAlignment {
 
-  /** Result memo, keyed on the canonicalized input plan and LRU-bounded
-    * ([[graft.ops.SessionMemoOf]]): one construction per (session,
-    * input) — a production caller constructs once and reads all four
-    * outputs, and the three q_split_* driver queries share through this.
-    *
-    * Construction MATERIALIZES the parsed record tables and the hub
-    * relations eagerly as checkpointed leaves (localCheckpoint +
-    * fresh-stats leaf, [[graft.graph.Graph]]'s iterative-kernel
-    * pattern): `intervals` is referenced by six downstream relations and
-    * the fat GfaParse expression trees by several each, and a persist()
-    * barrier alone leaves those trees INSIDE every downstream plan — each
-    * query action then re-analyzes hundreds of parse expressions
-    * (measured as the dominant cost of q_split_edges, ~5 s warm at
-    * sf0.1 in round 4). With leaf intermediates, a downstream query's
-    * whole tree is a handful of joins over LogicalRDD leaves: analysis
-    * cost tracks the OPERATOR count, not the parse layer.
-    *
-    * Lifetime: a leaf's cached blocks are freed by Spark's
-    * ContextCleaner once the Result is unreferenced (memo eviction drops
-    * only the memo's reference) — so a caller-held Result can NEVER be
-    * silently degraded to recompute by someone else's eviction, which
-    * the previous per-hub unpersist-on-evict LRU could do.
-    */
-  private val resultCache = new graft.ops.SessionMemoOf[Any, Result](16)
-
   final case class Result(
       nodes: DataFrame,       // (node, seg, start, end, length)
       edges: DataFrame,       // (src, dst, from_orient, to_orient, kind)
       rejectedEdges: DataFrame,
       rejectedLinks: DataFrame)
-
-  def apply(lines: DataFrame): Result = {
-    val planKey: Any = lines.queryExecution.analyzed.canonicalized
-    resultCache.getOrElseUpdate(lines.sparkSession, planKey)(build(lines))
-  }
 
   /** Eager materialization to a slim leaf: execute once, and every
     * downstream plan holds a LogicalRDD instead of the subtree
@@ -65,7 +35,22 @@ object SplitAlignment {
   private def leaf(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.freshLeaf(df.localCheckpoint(true))
 
-  private def build(lines: DataFrame): Result = {
+  /** Construction MATERIALIZES the parsed record tables and the hub
+    * relations eagerly as checkpointed leaves (localCheckpoint +
+    * fresh-stats leaf, [[graft.graph.Graph]]'s iterative-kernel
+    * pattern): `intervals` is referenced by six downstream relations and
+    * the fat GfaParse expression trees by several each, and a persist()
+    * barrier alone leaves those trees INSIDE every downstream plan — each
+    * query action then re-analyzes hundreds of parse expressions
+    * (measured as the dominant cost of q_split_edges, ~5 s warm at
+    * sf0.1 in round 4). With leaf intermediates, a downstream query's
+    * whole tree is a handful of joins over LogicalRDD leaves: analysis
+    * cost tracks the OPERATOR count, not the parse layer. A leaf's
+    * blocks are freed by Spark's ContextCleaner once the Result is
+    * unreferenced. Callers that read several outputs construct once and
+    * keep the Result.
+    */
+  def apply(lines: DataFrame): Result = {
     val segs = leaf(GfaParse.segments(lines).select("id", "length"))
     val ecs = leaf(GfaParse.gfa2Edges(lines).unionByName(
       GfaParse.containments(lines).drop("pos"), allowMissingColumns = true)

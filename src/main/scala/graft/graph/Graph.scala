@@ -263,8 +263,6 @@ object Graph {
       changed = next.where(col("label") =!= col("old")).count()
       labels = next.select("node", "label")
       iter += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        println(s"[cc] round $iter changed=$changed")
     }
     if (changed > 0)
       throw new IllegalStateException(

@@ -83,8 +83,7 @@ object OracleSig {
                                              col("embedding")))
       .cast("long")).cast("long")).head().getLong(0)
 
-  private val written = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]
+  private val written = new SessionCache[(String, String), String]
 
   /** Write `build` (stamped with `corpus_fp` = `fp`, evaluated only when
     * the write actually happens) to the deterministic per-sf path — once
@@ -95,9 +94,8 @@ object OracleSig {
     */
   def materialize(s: SparkSession, sfDir: String, table: String,
                   fp: => Long)(build: => DataFrame): DataFrame = {
-    written.keySet.removeIf(_._1.sparkContext.isStopped)
     val tag = tagOf(sfDir)
-    val p = written.computeIfAbsent((s, sfDir, table), { _ =>
+    val p = written(s, (sfDir, table)) {
       val fs = new org.apache.hadoop.fs.Path(Root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       dropStaleSiblings(fs, tag, table)
@@ -131,7 +129,7 @@ object OracleSig {
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       fs.delete(aside, true)
       target
-    })
+    }
     s.read.parquet(p).drop("corpus_fp")
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.Transcripts
 import graft.gfa.{GfaParse, SplitAlignment}
-import graft.ops.TurnGraph
+import graft.ops.{SessionCache, TurnGraph}
 import Inputs._
 
 /** The GFA parse, graph and split-alignment layers, driven by the turn
@@ -261,6 +261,17 @@ object GfaQueries {
              |FROM turns""".stripMargin))
   )
 
+  /** One [[SplitAlignment]] construction per (session, dir), shared by
+    * the three q_split_* queries. The rendered lines are materialized
+    * first: the construction reads them several times (segments, E/C
+    * edges, links), and each read would otherwise re-run the whole
+    * rank-window rendering DAG.
+    */
+  private val splitResults = new SessionCache[String, SplitAlignment.Result]
+
+  private def splitResult(s: SparkSession, dir: String): SplitAlignment.Result =
+    splitResults(s, dir)(SplitAlignment(splitGfaLines(s, dir).localCheckpoint(true)))
+
   /** GFA text for the split-alignment oracles: users 0-1's conversations
     * as GFA2 length-form segments (`S conv L`, L = total text bytes),
     * one coordinate E record per adjacent turn pair (from-span = the
@@ -268,40 +279,8 @@ object GfaQueries {
     * E per conversation targeting an undeclared ghost segment (a reject
     * by the reference's mapping-KeyError rule, builders.py:385-394,
     * which must NOT mint intervals).
-    *
-    * Memoized + persisted per (session, dir): [[SplitAlignment]] reads
-    * its input from many sub-relations (segments, E/C edges, links,
-    * breakpoints), and each reference would otherwise re-execute the
-    * whole rank-window rendering DAG — a production caller's input is a
-    * file scan (cheap to re-read); this derived input must be
-    * materialized once to match that cost shape.
     */
-  private val splitLinesCache = new graft.ops.SessionMemo[String]
-
-  /** One [[SplitAlignment]] construction per (session, dir): the Result
-    * is memoized inside SplitAlignment by canonicalized input plan, but
-    * canonicalizing the fat rendered-GFA DAG itself costs real driver
-    * time per lookup — this front memo keys on the cheap (session, dir)
-    * pair instead. Holding Results here is safe: their checkpointed-leaf
-    * intermediates stay valid regardless of the inner memo's LRU (see
-    * SplitAlignment's lifetime note).
-    */
-  private val splitResultCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), SplitAlignment.Result]
-
-  private def splitResult(s: SparkSession, dir: String): SplitAlignment.Result = {
-    splitResultCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    splitResultCache.computeIfAbsent((s, dir),
-      _ => SplitAlignment(splitGfaLines(s, dir)))
-  }
-
-  private def splitGfaLines(s: SparkSession, dir: String): DataFrame =
-    splitLinesCache.getOrElseUpdate(s, dir) {
-      buildSplitGfaLines(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private def buildSplitGfaLines(s: SparkSession, dir: String): DataFrame = {
+  private def splitGfaLines(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val t = Transcripts.fromEvents(
       s.read.parquet(s"$dir/events.parquet").where(col("user_id").isin(0L, 1L)))
@@ -371,12 +350,10 @@ object GfaQueries {
     * one copy per sf tag while still exercising the actual gzip write +
     * compressed-scan path on the first call of each session.
     */
-  private val gzCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
+  private val gzPaths = new SessionCache[String, String]
 
-  private def gzSegLines(s: SparkSession, dir: String): String = {
-    gzCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    gzCache.computeIfAbsent((s, dir), { _ =>
+  private def gzSegLines(s: SparkSession, dir: String): String =
+    gzPaths(s, dir) {
       val tag = new java.io.File(dir).getName
       val tmp = s"/tmp/graft_gz/$tag/gfa"
       T(s, dir).select(concat_ws("\t", lit("S"),
@@ -384,6 +361,5 @@ object GfaQueries {
         .as("value"))
         .write.mode("overwrite").option("compression", "gzip").text(tmp)
       tmp
-    })
-  }
+    }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.Transcripts
 import graft.graph.Graph
-import graft.ops.TurnGraph
+import graft.ops.{SessionCache, TurnGraph}
 import Inputs._
 
 /** Graph kernels over the conversation overlap graph (conversations
@@ -219,14 +219,14 @@ object GraphQueries {
     * persist() makes Spark's CacheManager substitute the one materialized
     * relation into every identical sub-plan across those queries in a
     * session (the tiny dimension-sized table is also a CollapseProject
-    * barrier for the self-joins above). Memoized per (session, dir) so
-    * repeated calls don't re-persist an identical plan (a handle leak and
-    * an "already cached" warning in long-lived sessions).
+    * barrier for the self-joins above). Built once per (session, dir)
+    * so repeated calls don't re-persist an identical plan (a handle leak
+    * and an "already cached" warning in long-lived sessions).
     */
-  private val convTextCache = new graft.ops.SessionMemo[String]
+  private val convTexts = new SessionCache[String, DataFrame]
 
   private def restrictedConvText(s: SparkSession, dir: String): DataFrame =
-    convTextCache.getOrElseUpdate(s, dir) {
+    convTexts(s, dir) {
       // the c0d/c1d conv prefixes are exactly users 0 and 1 (conv_id =
       // 'c' + user_id + 'd' + date), so the restriction is applied to
       // the events scan where it pushes into the parquet reader — the
@@ -239,7 +239,7 @@ object GraphQueries {
       // no-silent-caps: surface the df-cap's drops once per (session, dir)
       // — every query derived from this base silently excludes these
       // texts from edge building, so their count must be visible. The
-      // memo bounds this to one tiny aggregation per session.
+      // cache bounds this to one tiny aggregation per session.
       val nDropped = graft.ops.Overlap.droppedTexts(base, OverlapDfCap).count()
       if (nDropped > 0)
         System.err.println(

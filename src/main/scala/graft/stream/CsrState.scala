@@ -144,6 +144,17 @@ object CsrState {
       last_ts = new Timestamp(s.lastTsMs))
   }
 
+  /** An interval string ("1 hour", "48 hours") in milliseconds, a month
+    * counted as 30 days — the event-time timeout of the stateful stream
+    * operators here and in [[Patterns]].
+    */
+  private[stream] def intervalMs(interval: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
+      .stringToInterval(
+        org.apache.spark.unsafe.types.UTF8String.fromString(interval))
+    iv.months * 2592000000L + iv.days * 86400000L + iv.microseconds / 1000L
+  }
+
   /** Wire the operator over a typed turn stream. The input must carry a
     * watermark on `ts` for EventTimeTimeout to fire.
     */
@@ -151,11 +162,7 @@ object CsrState {
       : Dataset[ConvUpdate] = {
     implicit val stateEnc = Encoders.product[ConvState]
     implicit val outEnc = Encoders.product[ConvUpdate]
-    val ms = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(idleTimeout))
-    val timeoutMs = ms.months * 2592000000L + ms.days * 86400000L +
-      ms.microseconds / 1000L
+    val timeoutMs = intervalMs(idleTimeout)
     turns
       .groupByKey(_.conv_id)(Encoders.STRING)
       .flatMapGroupsWithState(
@@ -191,11 +198,7 @@ object CsrState {
     implicit val pEnc = Encoders.product[ConvPartial]
     implicit val stateEnc = Encoders.product[ConvState]
     implicit val outEnc = Encoders.product[ConvUpdate]
-    val ms = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(idleTimeout))
-    val timeoutMs = ms.months * 2592000000L + ms.days * 86400000L +
-      ms.microseconds / 1000L
+    val timeoutMs = intervalMs(idleTimeout)
     val partials = turns.mapPartitions { it =>
       final class Acc {
         val b = new scala.collection.mutable.ArrayBuilder.ofInt

@@ -74,8 +74,8 @@ object IncrementalNearDup {
     val spark = batch.sparkSession
     // batch-sized signature work only; eager checkpoints are both the
     // CollapseProject barrier and the replay-safe truncation point
-    val bsh = Dedup.shingleTableOnce(batch.dropDuplicates("doc_id"),
-                                     "doc_id", "text", shingleK)
+    val bsh = Dedup.shingleTable(batch.dropDuplicates("doc_id"),
+                                 "doc_id", "text", shingleK)
       .localCheckpoint(true)
     val bBands = Dedup.minhashBands(bsh, numHashes, bands)
       .localCheckpoint(true)

@@ -139,11 +139,7 @@ object Patterns {
              idleTimeout: String = "48 hours"): Dataset[RunMatch] = {
     implicit val stateEnc = Encoders.product[RunState]
     implicit val outEnc = Encoders.product[RunMatch]
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(idleTimeout))
-    val timeoutMs = iv.months * 2592000000L + iv.days * 86400000L +
-      iv.microseconds / 1000L
+    val timeoutMs = CsrState.intervalMs(idleTimeout)
     flagged
       .groupByKey(_.conv_id)(Encoders.STRING)
       .flatMapGroupsWithState(
@@ -166,11 +162,7 @@ object Patterns {
                 idleTimeout: String = "48 hours"): Dataset[RunMatch] = {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode,
       TimerValues, TTLConfig, ValueState}
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(idleTimeout))
-    val timeoutMs = iv.months * 2592000000L + iv.days * 86400000L +
-      iv.microseconds / 1000L
+    val timeoutMs = CsrState.intervalMs(idleTimeout)
     val processor =
       new org.apache.spark.sql.streaming.StatefulProcessor[String, Turn, RunMatch] {
         @transient private var runs: ValueState[RunState] = _

@@ -68,7 +68,7 @@ object Dedup {
     * building). All downstream minhash/jaccard math runs on longs.
     * Collisions are negligible for dedup purposes (2^-64 per pair).
     * NOTE: callers must materialize the token-hash array as a real column
-    * first ([[hashedDocs]]) — inlining it would duplicate the tokenize+
+    * first ([[shingleTable]]) — inlining it would duplicate the tokenize+
     * hash subtree k+1 times (no CSE through higher-order functions).
     */
   def shingleHashesFromTokenHashes(tokenHashes: Column, k: Int): Column =
@@ -90,40 +90,6 @@ object Dedup {
     array((0 until numHashes).map { h =>
       array_min(transform(shingleHashes, x => xxhash64(lit(h), x)))
     }: _*)
-
-  /** Memo of the persisted token-hash tables, keyed on (session,
-    * canonicalized input plan, params): the same docs table is shingled
-    * by several dedup queries per session, and re-persisting an identical
-    * plan each call both leaked storage handles and spammed "already
-    * cached" warnings (degrading that warning's diagnostic value).
-    * Dead-session eviction + persist()-equivalent staleness semantics:
-    * [[graft.ops.SessionMemo]].
-    */
-  private val hashedDocsCache =
-    new graft.ops.SessionMemo[(Any, String, String, Int)]
-
-  private def hashedDocs(docs: DataFrame, idCol: String, textCol: String,
-                         shingleK: Int): DataFrame = {
-    val key = (docs.queryExecution.analyzed.canonicalized: Any,
-               idCol, textCol, shingleK)
-    hashedDocsCache.getOrElseUpdate(docs.sparkSession, key) {
-      // persist = a CollapseProject barrier: shingleHashesFromTokenHashes
-      // references `th` k+1 times, and without the InMemoryRelation
-      // boundary the optimizer inlines the tokenize+hash subtree into
-      // every reference (measured 6× recompute). The cached array is also
-      // what the candidate and verify stages share.
-      val thDf = docs
-        .select(col(idCol).as("id"),
-          transform(
-            split(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")), " "),
-            t => xxhash64(t)).as("th"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      thDf
-        .select(col("id"),
-                shingleHashesFromTokenHashes(col("th"), shingleK).as("sh"))
-        .where(size(col("sh")) > 0)
-    }
-  }
 
   /** Production guard for LSH banding: every member pair of one bucket
     * self-joins, so one boilerplate cluster of 10⁶ near-identical docs
@@ -155,27 +121,24 @@ object Dedup {
     * candidate + verify stage downstream is hash-free relational algebra
     * ([[minhashRankedFrom]]), independently checkable by a SQL oracle
     * over the same parquet ([[graft.ops.OracleSig]]).
+    *
+    * The token-hash array sits behind a lazy localCheckpoint: a
+    * CollapseProject barrier (shingleHashesFromTokenHashes references
+    * `th` k+1 times, and without a leaf the optimizer inlines the
+    * tokenize+hash subtree into every reference — measured 6× recompute)
+    * that the candidate and verify stages share. It is computed by the
+    * first action over the result and its blocks are freed with the
+    * plan; nothing outlives the call's DataFrames, so every call reads
+    * what `docs` holds now.
     */
   def shingleTable(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text", shingleK: Int = 5): DataFrame =
-    hashedDocs(docs, idCol, textCol, shingleK)
-
-  /** Non-memoized [[shingleTable]] for per-micro-batch inputs (the
-    * incremental near-dup path): the token-hash CollapseProject barrier
-    * is an eager localCheckpoint — freed with the plan — instead of a
-    * session-lifetime persist; a streaming job shingling thousands of
-    * batches must not accumulate cache entries (even LRU-bounded ones).
-    * Same output, bit for bit, as [[shingleTable]].
-    */
-  def shingleTableOnce(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text", shingleK: Int = 5)
-      : DataFrame = {
+                   textCol: String = "text", shingleK: Int = 5): DataFrame = {
     val thDf = docs
       .select(col(idCol).as("id"),
         transform(
           split(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")), " "),
           t => xxhash64(t)).as("th"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     thDf
       .select(col("id"),
               shingleHashesFromTokenHashes(col("th"), shingleK).as("sh"))
@@ -232,7 +195,7 @@ object Dedup {
                              textCol: String = "text", shingleK: Int = 5,
                              numHashes: Int = 32, bands: Int = 8,
                              maxBucket: Int = DefaultMaxBucket): DataFrame =
-    oversize(bandedOf(hashedDocs(docs, idCol, textCol, shingleK),
+    oversize(bandedOf(shingleTable(docs, idCol, textCol, shingleK),
                       numHashes, bands),
              Seq("band", "band_hash"), maxBucket)
 
@@ -252,7 +215,7 @@ object Dedup {
                         shingleK: Int = 5, numHashes: Int = 32,
                         bands: Int = 8,
                         maxBucket: Int = DefaultMaxBucket): DataFrame =
-    candidatesFrom(hashedDocs(docs, idCol, textCol, shingleK), numHashes,
+    candidatesFrom(shingleTable(docs, idCol, textCol, shingleK), numHashes,
                    bands, maxBucket)
 
   /** Shingle-set Jaccard for candidate pairs — the verification step after
@@ -261,10 +224,10 @@ object Dedup {
   def jaccardVerify(docs: DataFrame, candidates: DataFrame,
                     idCol: String, textCol: String, shingleK: Int = 5)
       : DataFrame =
-    verifyFrom(hashedDocs(docs, idCol, textCol, shingleK), candidates)
+    verifyFrom(shingleTable(docs, idCol, textCol, shingleK), candidates)
 
   /** End-to-end MinHash near-dup pipeline: LSH candidates → Jaccard ≥
-    * threshold. The shingle-hash table is computed once and persisted
+    * threshold. The shingle-hash table is computed once and shared
     * across the candidate and verify stages (the reference's cache-then-
     * pair pattern, analysis.py:235-239).
     */
@@ -273,7 +236,7 @@ object Dedup {
                       numHashes: Int = 32, bands: Int = 8,
                       threshold: Double = 0.7,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sh = hashedDocs(docs, idCol, textCol, shingleK)
+    val sh = shingleTable(docs, idCol, textCol, shingleK)
     verifyFrom(sh, candidatesFrom(sh, numHashes, bands, maxBucket))
       .where(col("jaccard") >= threshold)
   }
@@ -285,7 +248,7 @@ object Dedup {
                     textCol: String = "text", shingleK: Int = 5,
                     numHashes: Int = 32, bands: Int = 8, limit: Int = 200)
       : DataFrame = {
-    val sh = hashedDocs(docs, idCol, textCol, shingleK)
+    val sh = shingleTable(docs, idCol, textCol, shingleK)
     verifyFrom(sh, candidatesFrom(sh, numHashes, bands))
       .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
       .limit(limit)

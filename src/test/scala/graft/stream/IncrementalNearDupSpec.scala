@@ -51,7 +51,7 @@ class IncrementalNearDupSpec extends SparkSuite {
 
   test("streamed batches against materialized base signatures == batch pipeline") {
     val base = df(baseRows)
-    val baseSh = Dedup.shingleTableOnce(base).localCheckpoint(true)
+    val baseSh = Dedup.shingleTable(base).localCheckpoint(true)
     val baseBands = Dedup.minhashBands(baseSh).localCheckpoint(true)
     val root = tmp("inc_neardup")
     val ms = MemoryStream[(Long, String)](
@@ -80,7 +80,7 @@ class IncrementalNearDupSpec extends SparkSuite {
 
   test("replaying a batch overwrites its own outputs — pair relation unchanged") {
     val base = df(baseRows)
-    val baseSh = Dedup.shingleTableOnce(base).localCheckpoint(true)
+    val baseSh = Dedup.shingleTable(base).localCheckpoint(true)
     val baseBands = Dedup.minhashBands(baseSh).localCheckpoint(true)
     val root = tmp("inc_neardup_replay")
     def run(b: Seq[(Long, String)], id: Long) =

@@ -35,6 +35,31 @@ class DedupSpec extends SparkSuite {
     assert(nd.exists { case (a, b) => (a == 2L) || (b == 2L) })
   }
 
+  test("shingleTable reads the directory as it is now, after another writer swapped it") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val root = Files.createTempDirectory("dedup_swap")
+    val dir = root.resolve("docs")
+    def write(ids: Seq[Long], to: java.nio.file.Path): Unit =
+      ids.map(i => (i, s"doc $i $base")).toDF("doc_id", "text")
+        .write.parquet(to.toString)
+    def shingledIds(): Seq[Long] =
+      Dedup.shingleTable(spark.read.parquet(dir.toString))
+        .select("id").as[Long].collect().sorted.toSeq
+    try {
+      write(Seq(1L, 2L), dir)
+      assert(shingledIds() == Seq(1L, 2L))
+      // the swap OracleSig.materialize does, outside Spark: write a
+      // sibling, move the old table aside, rename the sibling in
+      val sibling = root.resolve("docs.tmp")
+      write(Seq(7L, 8L, 9L), sibling)
+      val aside = root.resolve("docs.old")
+      Files.move(dir, aside, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(sibling, dir, StandardCopyOption.ATOMIC_MOVE)
+      org.apache.commons.io.FileUtils.deleteDirectory(aside.toFile)
+      assert(shingledIds() == Seq(7L, 8L, 9L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("clustersFromPairs: chains cluster transitively, keeper = longest text") {
     // A≈B and B≈C but no (A,C) pair — the cluster must still hold all
     // three (the thing pair-level output misses); a disjoint pair (7,9)

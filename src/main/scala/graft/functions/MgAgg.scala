@@ -20,9 +20,9 @@ final class MgAggBuf(val capacity: Int) {
   final class Cnt(var v: Long)
   val m = new java.util.HashMap[UTF8String, Cnt]()
 
-  /** One input item — the classic MG step, identical to the typed
-    * [[graft.ops.MisraGries]].reduce: present → increment; room → insert;
-    * full → decrement every counter, drop zeros, do not insert.
+  /** One input item — the classic MG step: present → increment; room →
+    * insert; full → decrement every counter (the new item's implicit
+    * counter hits 0), drop zeros, do not insert.
     */
   def addOne(item: UTF8String): Unit = {
     val cur = m.get(item)
@@ -46,8 +46,9 @@ final class MgAggBuf(val capacity: Int) {
     if (cur != null) cur.v += c else m.put(item, new Cnt(c))
   }
 
-  /** Mergeable-summaries reduction, identical to the typed merge: subtract
-    * the (capacity+1)-th largest count from every counter, keep positives.
+  /** Mergeable-summaries reduction: subtract the (capacity+1)-th largest
+    * count from every counter, keep positives — the combined sketch keeps
+    * the MG error bound.
     */
   def reduceIfOver(): Unit = {
     if (m.size <= capacity) return
@@ -66,18 +67,31 @@ final class MgAggBuf(val capacity: Int) {
   }
 }
 
-/** Misra-Gries heavy hitters as a Catalyst [[TypedImperativeAggregate]] —
-  * the InternalRow-level twin of the typed [[graft.ops.MisraGries]]
-  * Aggregator for the BATCH path (the streaming form keeps the typed
-  * udaf). Same sketch semantics step for step (pinned against the typed
-  * class in MgAggSpec, exact and adversarial regimes), same output
-  * contract: array<struct<item,cnt>> sorted (cnt desc, item asc). The
-  * typed path paid a per-row String deserialization plus an immutable
-  * Map rebuild per item; this update path probes an open HashMap with the
-  * transient UTF8String straight off the InternalRow and clones only on
-  * first insert. Map-side partial aggregation is unchanged: every
-  * partition still reduces to ≤ capacity counters per group before the
-  * shuffle, so O(groups × capacity) rows move at any corpus size.
+/** Misra-Gries heavy hitters as a Catalyst [[TypedImperativeAggregate]]
+  * — the engine's one MG sketch, behind both the batch
+  * [[graft.ops.HeavyHitters.terms]] and the streaming
+  * [[graft.ops.HeavyHitters.windowedTerms]] (where the serialized buffer
+  * is the per-window state). It keeps at most `capacity` counters per
+  * group where a plain groupBy count keys state by DISTINCT VALUE;
+  * map-side partial aggregation reduces every partition to ≤ capacity
+  * counters per group before the shuffle, so O(groups × capacity) rows
+  * move at any corpus size.
+  *
+  * Guarantees (the classic MG bound, and the mergeable-summaries merge of
+  * Agarwal et al., PODS'12): with N items in a group, every item whose
+  * true frequency exceeds N/(capacity+1) is present in the output, and a
+  * reported count undercounts its true frequency by at most
+  * N/(capacity+1). When a group's DISTINCT item count is ≤ capacity, no
+  * counter is ever evicted anywhere and every reported count is EXACT —
+  * the condition the driver oracle runs under; the approximate regime's
+  * bounds are pinned by HeavyHittersSpec on an adversarial stream.
+  *
+  * Output: array<struct<item,cnt>> sorted (cnt desc, item asc). The
+  * update path probes an open HashMap with the transient UTF8String
+  * straight off the InternalRow and clones only on first insert; the
+  * typed Aggregator it replaced (now MgAggSpec's test-side reference,
+  * pinned step for step) paid a per-row String deserialization plus an
+  * immutable Map rebuild per item.
   */
 case class MgSketchAgg(
     child: Expression, capacity: Int,
@@ -110,7 +124,7 @@ case class MgSketchAgg(
 
   override def eval(buf: MgAggBuf): Any = {
     // (cnt desc, item asc) — item order via java.lang.String like the
-    // typed finish()'s sortBy((-c, k)), so ranks match for any input
+    // typed reference's sortBy((-c, k)), so ranks match for any input
     val entries = new Array[(String, UTF8String, Long)](buf.m.size)
     var i = 0
     val it = buf.m.entrySet().iterator()
@@ -172,8 +186,8 @@ case class MgSketchAgg(
     copy(inputAggBufferOffset = newOffset)
 
   override def nullable: Boolean = false
-  // nullability mirrors the encoder schema of the typed Seq[MgHit] output
-  // (item nullable, cnt not), so the dumped parquet schema is unchanged
+  // item nullable, cnt not: the schema of the typed Seq[MgHit] encoder it
+  // replaced, so dumped parquet schemas stay as they were
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = true),
     StructField("cnt", LongType, nullable = false))), containsNull = true)

@@ -36,16 +36,6 @@ object Graph {
     */
   val LoopRowsPerPartition: Long = 65536L
 
-  /** Run an iterative kernel's driver loop with its per-round shuffle
-    * parallelism derived from the MEASURED graph size instead of the
-    * session default (guide §2: scale-adaptive partitioning, not a
-    * constant). In the tiny regime AQE is also disabled for the scope:
-    * each AQE query-stage materialization is a separate job, and a
-    * 3-round loop over a dimension-sized graph was measured at ~39 jobs —
-    * per-round fixed overhead, not compute. Graphs big enough to need ≥
-    * the session parallelism run untouched (AQE coalescing/skew handling
-    * stay in force on the 100-TB path).
-    */
   /** Shared rows→partitions derivation of [[loopScoped]]/[[loopCompact]]
     * — one definition so the loop's shuffle parallelism can never
     * disagree with the compacted cached relation's layout.
@@ -58,6 +48,16 @@ object Graph {
     (target, default)
   }
 
+  /** Run an iterative kernel's driver loop with its per-round shuffle
+    * parallelism derived from the MEASURED graph size instead of the
+    * session default (guide §2: scale-adaptive partitioning, not a
+    * constant). In the tiny regime AQE is also disabled for the scope:
+    * each AQE query-stage materialization is a separate job, and a
+    * 3-round loop over a dimension-sized graph was measured at ~39 jobs —
+    * per-round fixed overhead, not compute. Graphs big enough to need ≥
+    * the session parallelism run untouched (AQE coalescing/skew handling
+    * stay in force on the 100-TB path).
+    */
   private def loopScoped[A](spark: SparkSession, rows: Long)(body: => A): A = {
     val (target, default) = loopTarget(spark, rows)
     if (target >= default) body
@@ -119,14 +119,6 @@ object Graph {
                       greatest(col("src"), col("dst")).as("b"))
       .distinct().count()
 
-  /** Connected-component count via iterative min-label propagation (A8;
-    * reference: nx.number_connected_components, analysis.py:54).
-    *
-    * Each round: every node adopts min(own label, neighbor labels);
-    * converges in O(diameter) rounds. `localCheckpoint` truncates lineage
-    * per round so plans stay bounded. Nodes with no edges count as
-    * singleton components (pass `allNodes` to include isolated nodes).
-    */
   /** Node-count threshold for the components fast path: at or below it
     * the loop runs directly on node strings with the label table
     * broadcast each round (dimension-sized graphs skip the id-indexing
@@ -135,6 +127,14 @@ object Graph {
     */
   val CcSmallGraphNodes: Long = 200000L
 
+  /** Connected-component count via iterative min-label propagation (A8;
+    * reference: nx.number_connected_components, analysis.py:54).
+    *
+    * Each round: every node adopts min(own label, neighbor labels);
+    * converges in O(diameter) rounds. `localCheckpoint` truncates lineage
+    * per round so plans stay bounded. Nodes with no edges count as
+    * singleton components (pass `allNodes` to include isolated nodes).
+    */
   def connectedComponents(edges: DataFrame, allNodes: Option[DataFrame] = None,
                           maxIter: Int = 200): DataFrame = {
     val spark = edges.sparkSession

@@ -1,76 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Misra-Gries heavy hitters as a typed Aggregator: the bounded-memory
-  * frequency sketch for "top tokens / domains / tools" over corpora whose
-  * vocabulary exceeds executor memory — a plain groupBy count keys state
-  * by DISTINCT VALUE (unbounded); this keeps at most `capacity` counters
-  * per group, map-side partial aggregation included (ObjectHashAggregate
-  * reduces every partition to ≤ capacity entries BEFORE the shuffle), so
-  * the shuffle moves O(groups × capacity) rows at any corpus size.
-  *
-  * Guarantees (the classic MG bound, and the mergeable-summaries merge of
-  * Agarwal et al., PODS'12): with N items in a group, every item whose
-  * true frequency exceeds N/(capacity+1) is present in the output, and a
-  * reported count undercounts its true frequency by at most
-  * N/(capacity+1). When a group's DISTINCT item count is ≤ capacity, no
-  * counter is ever evicted anywhere and every reported count is EXACT —
-  * the condition the driver oracle runs under; the approximate regime's
-  * bounds are pinned by HeavyHittersSpec on an adversarial stream.
-  */
-class MisraGries(capacity: Int)
-    extends Aggregator[String, Map[String, Long], Seq[MgHit]] {
-  require(capacity >= 1, s"capacity must be >= 1, got $capacity")
-
-  override def zero: Map[String, Long] = Map.empty
-
-  override def reduce(buf: Map[String, Long], item: String): Map[String, Long] =
-    buf.get(item) match {
-      case Some(c) => buf.updated(item, c + 1)
-      case None if buf.size < capacity => buf.updated(item, 1L)
-      case None =>
-        // classic MG step: a full sketch meeting a new item decrements
-        // EVERY counter (the new item's implicit counter hits 0 and is
-        // not inserted); zeroed counters free their slots
-        buf.flatMap { case (k, c) => if (c > 1) Some(k -> (c - 1)) else None }
-    }
-
-  override def merge(a: Map[String, Long], b: Map[String, Long])
-      : Map[String, Long] = {
-    val sum = b.foldLeft(a) { case (m, (k, c)) =>
-      m.updated(k, m.getOrElse(k, 0L) + c)
-    }
-    if (sum.size <= capacity) sum
-    else {
-      // mergeable-summaries reduction: subtract the (capacity+1)-th
-      // largest count from every counter, keep the positive ones — the
-      // combined sketch keeps the MG error bound
-      val cut = sum.values.toSeq.sorted(Ordering[Long].reverse)(capacity)
-      sum.flatMap { case (k, c) =>
-        if (c - cut > 0) Some(k -> (c - cut)) else None
-      }
-    }
-  }
-
-  override def finish(buf: Map[String, Long]): Seq[MgHit] =
-    buf.toSeq.sortBy { case (k, c) => (-c, k) }
-      .map { case (k, c) => MgHit(k, c) }
-
-  override def bufferEncoder: Encoder[Map[String, Long]] =
-    ExpressionEncoder[Map[String, Long]]()
-  override def outputEncoder: Encoder[Seq[MgHit]] =
-    ExpressionEncoder[Seq[MgHit]]()
-}
-
-/** One surviving counter: `cnt` is exact when the group's distinct item
-  * count is ≤ the sketch capacity, otherwise a ≤ N/(capacity+1)
-  * undercount.
-  */
-case class MgHit(item: String, cnt: Long)
+import graft.functions.MgAgg.mg_sketch
 
 object HeavyHitters {
 
@@ -79,11 +12,9 @@ object HeavyHitters {
     * summary. Output: (groupCol, term, cnt), count-descending ranks
     * implied by (cnt desc, term) order within a group.
     *
-    * Scale shape: explode is row-local; the imperative
-    * [[graft.functions.MgSketchAgg]] gets map-side partial aggregation,
-    * so every partition contributes at most `capacity` counters per group
-    * to the one shuffle (the typed [[MisraGries]] stays for the streaming
-    * form below, pinned equivalent in MgAggSpec).
+    * Scale shape: explode is row-local; [[graft.functions.MgSketchAgg]]
+    * gets map-side partial aggregation, so every partition contributes
+    * at most `capacity` counters per group to the one shuffle.
     */
   def terms(docs: DataFrame, groupCol: String = "source",
             textCol: String = "text", capacity: Int = 64): DataFrame =
@@ -91,7 +22,7 @@ object HeavyHitters {
       .select(col(groupCol).as("g"),
               explode(split(col(textCol), " ")).as("item"))
       .groupBy("g")
-      .agg(graft.functions.MgAgg.mg_sketch(col("item"), capacity).as("hits"))
+      .agg(mg_sketch(col("item"), capacity).as("hits"))
       .select(col("g").as(groupCol), explode(col("hits")).as("h"))
       .select(col(groupCol), col("h.item").as("term"), col("h.cnt").as("cnt"))
 
@@ -108,16 +39,13 @@ object HeavyHitters {
     * count stays ≤ capacity (the driver-oracle regime).
     */
   def windowedTerms(src: DataFrame, watermark: String, width: String,
-                    capacity: Int = 16): DataFrame = {
-    val mg = udaf(new MisraGries(capacity),
-                  org.apache.spark.sql.Encoders.STRING)
+                    capacity: Int = 16): DataFrame =
     src.withWatermark("ts", watermark)
       .select(col("ts"), explode(split(col("text"), " ")).as("item"))
       .groupBy(window(col("ts"), width))
-      .agg(mg(col("item")).as("hits"))
+      .agg(mg_sketch(col("item"), capacity).as("hits"))
       .select(col("window.start").as("window_start"),
               explode(col("hits")).as("h"))
       .select(col("window_start"), col("h.item").as("term"),
               col("h.cnt").as("cnt"))
-  }
 }

@@ -25,11 +25,4 @@ object Skew {
       .groupBy(col(key))
       .agg(sum("_pc").as("n"), sum("_ps").as("total"))
   }
-
-  /** Salted repartition for a skewed join/state input: appends a salt
-    * column derived from a secondary column so one hot key spreads across
-    * partitions while rows of the same (key, secondary) stay together.
-    */
-  def saltBy(df: DataFrame, secondary: Column, saltBuckets: Int = 16): DataFrame =
-    df.withColumn("_salt", pmod(xxhash64(secondary), lit(saltBuckets)))
 }

@@ -109,29 +109,6 @@ object TurnGraph {
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
               col("e.weight").as("weight"))
       .groupBy("src", "dst").agg(max("weight").as("weight"))
-
-  /** Bidirected role-split node view (G1): every turn emits a ":user"- and
-    * ":assistant"-facing node, mirroring the reference's `id:+ / id:-`
-    * segment duplication (builders.py:167-178).
-    */
-  def roleSplitNodes(turns: DataFrame): DataFrame =
-    turns.select(
-      col("conv_id"), col("turn_idx"),
-      explode(array(lit("+"), lit("-"))).as("facet"),
-      concat(nodeId(col("conv_id"), col("turn_idx")), lit(":"), col("facet"))
-        .as("node_id"))
-
-  /** Bidirected edge mirroring (G2): each edge also emits its
-    * reverse-complement twin (orientation flipped), unless directed.
-    */
-  def mirrorEdges(edgeDf: DataFrame, keepDirected: Boolean = false): DataFrame =
-    if (keepDirected) edgeDf
-    else edgeDf.unionByName(
-      edgeDf.select(
-        col("conv_id"),
-        col("dst_idx").as("src_idx"), col("src_idx").as("dst_idx"),
-        col("dst_role").as("src_role"), col("src_role").as("dst_role"),
-        col("gap_us")))
 }
 
 sealed trait DupMode

@@ -12,8 +12,8 @@ object SimQueries {
   lazy val defs: Seq[QueryDef] = Seq(
     QueryDef("q_emb_neardups",
       (s, dir) => {
-        // ranked form: best LSH-candidate pairs by cosine (thresholded form
-        // is Dedup.embeddingNearDups; synthetic corpus has no >0.8 dups)
+        // ranked form: best LSH-candidate pairs by cosine (threshold -1;
+        // the synthetic corpus has no >0.8 dups)
         val e = emb(s, dir)
         val sigs = embSig(s, dir, "vec_sigs")(
           Knn.lshSignatures(e, "vec_id", "embedding", bits = 32))
@@ -148,7 +148,7 @@ object SimQueries {
     // brute's candidate volume (IvfTune), while a clustered corpus stays
     // at the base 8 probes (pinned in KnnSpec). Timed cost INCLUDES
     // index training — a real deployment trains once (trainCentroids +
-    // invertedLists) and amortizes across query batches via ivfTopKWith.
+    // invertedLists) and amortizes across query batches via ivfTopKWithLists.
     QueryDef("q_knn_ivf",
       (s, dir) => {
         val e = emb(s, dir)

@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.functions.VecFunctions.vec_dot
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
-  * path of the similarity-search family next to [[Knn.lshTopK]]:
+  * path of the similarity-search family next to [[Knn.lshTopKFromSigs]]:
   * a spherical-k-means coarse quantizer partitions the corpus into
   * `nClusters` inverted lists; queries probe the `nprobe` nearest
   * centroids and rerank exactly within those lists only.
@@ -15,15 +15,15 @@ import graft.functions.VecFunctions.vec_dot
   * Scale shape: training runs on a DETERMINISTIC HASH-ORDERED SAMPLE
   * (`sampleFactor` × nClusters vectors — standard IVF practice; the
   * sample is what Lloyd's per-dimension means shuffle, never the corpus),
-  * and the trained centroid table is a reusable artifact: production
-  * callers train once per corpus via [[trainCentroids]] and run any
-  * number of query batches through [[ivfTopKWith]]. The search itself is
-  * one broadcast of the nClusters-row centroid table plus equi-joins on
-  * (cluster_id) and (query_id) — no hint forces the query side into a
-  * broadcast, so corpus-as-queries workloads (self-kNN graphs) cannot
-  * blow the driver; AQE still broadcasts genuinely small query batches
-  * at runtime. Everything is deterministic: hash-ordered init, fixed
-  * Lloyd iteration count, no RNG.
+  * and the trained index is a reusable artifact: production callers
+  * train once per corpus via [[trainCentroids]] + [[invertedLists]] and
+  * run any number of query batches through [[ivfTopKWithLists]]. The
+  * search itself is one broadcast of the nClusters-row centroid table
+  * plus equi-joins on (cluster_id) and (query_id) — no hint forces the
+  * query side into a broadcast, so corpus-as-queries workloads (self-kNN
+  * graphs) cannot blow the driver; AQE still broadcasts genuinely small
+  * query batches at runtime. Everything is deterministic: hash-ordered
+  * init, fixed Lloyd iteration count, no RNG.
   */
 object Ivf {
 
@@ -101,8 +101,7 @@ object Ivf {
     * (nbr_id, cluster_id) assignment of the FULL corpus against trained
     * centroids. Production deployments materialize this once per corpus
     * snapshot (it is a parquet-writeable table bucketable by cluster_id)
-    * and pass it to [[ivfTopKWith]]; the convenience path recomputes it
-    * per call.
+    * and pass it to [[ivfTopKWithLists]].
     */
   def invertedLists(corpus: DataFrame, centroids: DataFrame,
                     idCol: String = "vec_id",
@@ -186,29 +185,13 @@ object Ivf {
                  npMax, fallbackMargin)
   }
 
-  /** Convenience overload: trains (on the sample) and searches in one
-    * call — the driver-contract shape. The timed cost of a query batch
-    * through here INCLUDES index training; amortized deployments use
-    * [[trainCentroids]] + [[ivfTopKWith]].
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              nClusters: Int = 16, nprobe: Int = 4, iters: Int = 3,
-              simDecimals: Int = -1, sampleFactor: Int = 100,
-              nprobeMax: Int = -1, escalateMargin: Double = 0.05,
-              fallbackMargin: Double = -1.0): DataFrame =
-    ivfTopKWith(corpus, queries,
-                trainCentroids(corpus, idCol, vecCol, nClusters, iters,
-                               sampleFactor),
-                k, idCol, vecCol, nprobe, simDecimals, nprobeMax,
-                escalateMargin, fallbackMargin)
-
-  /** IVF approximate top-k against a PRE-TRAINED centroid table: probe
-    * the `nprobe` nearest inverted lists per query, exact cosine rerank
-    * within them via the map-side-combinable [[graft.functions.TopKByScoreAgg]]
-    * (only keys×k rows cross the final shuffle). `centroids` comes from
-    * [[trainCentroids]] — an already-materialized (localCheckpoint'd)
-    * nClusters-row table, so no extra persist is taken here.
+  /** IVF approximate top-k in the train-once/search-many deployment
+    * shape: both index halves — the centroid table from
+    * [[trainCentroids]] AND the corpus assignment from [[invertedLists]]
+    * (materialized once per corpus snapshot, bucketable by cluster_id) —
+    * are passed in, so a query batch pays only probe selection + exact
+    * cosine rerank within the `nprobe` nearest inverted lists
+    * ([[rerankTopK]]), never a corpus re-assignment.
     *
     * Recall adaptivity (`nprobeMax` > `nprobe`): beyond the base probes,
     * a query ALSO probes every centroid whose similarity is within
@@ -219,26 +202,6 @@ object Ivf {
     * corpus (IVF's structural worst case) MOST queries — escalates. The
     * decision is per-query, rides the existing centroid cross-join, and
     * costs nothing when the corpus is genuinely clustered.
-    */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
-                  centroids: DataFrame, k: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  nprobe: Int = 4, simDecimals: Int = -1,
-                  nprobeMax: Int = -1,
-                  escalateMargin: Double = 0.05,
-                  fallbackMargin: Double = -1.0): DataFrame =
-    ivfTopKWithLists(corpus, queries, centroids,
-                     invertedLists(corpus, centroids, idCol, vecCol), k,
-                     idCol, vecCol, nprobe, simDecimals, nprobeMax,
-                     escalateMargin, fallbackMargin)
-
-  /** The documented train-once/search-many deployment shape, now directly
-    * callable: both index halves — the centroid table from
-    * [[trainCentroids]] AND the corpus assignment from [[invertedLists]]
-    * (materialized once per corpus snapshot, bucketable by cluster_id) —
-    * are passed in, so a query batch pays only probe selection + rerank,
-    * never a corpus re-assignment ([[ivfTopKWith]] recomputes the lists
-    * per call, which is the convenience shape, not the amortized one).
     */
   def ivfTopKWithLists(corpus: DataFrame, queries: DataFrame,
                        centroids: DataFrame, lists: DataFrame, k: Int,

@@ -88,16 +88,6 @@ object Knn {
               col("e.sim").as("sim"), (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Rank window for top-k: `simDecimals ≥ 0` ranks on the ROUNDED
-    * similarity (ties broken by ascending neighbor id) so the ordering is
-    * reproducible across engines with different floating-point
-    * accumulation orders — required for cross-engine (DuckDB) oracles.
-    */
-  private def rankWindow(simDecimals: Int) = {
-    val key = if (simDecimals >= 0) round(col("sim"), simDecimals) else col("sim")
-    Window.partitionBy("query_id").orderBy(key.desc, col("nbr_id").asc)
-  }
-
   /** `bits`-bit random-hyperplane signature (SimHash for vectors): one
     * codegen'd pass over the float array
     * ([[graft.functions.HyperplaneSig]]). The previous HOF formulation
@@ -118,12 +108,15 @@ object Knn {
                     vecCol: String = "embedding", bits: Int = 32): DataFrame =
     df.select(col(idCol).as("id"), lshSignature(col(vecCol), bits).as("sig"))
 
-  /** [[lshTopK]]'s post-hash half for the self-kNN-graph workload
+  /** LSH-bucketed approximate top-k for the self-kNN-graph workload
     * (corpus == queries == `emb`) over a PRE-MATERIALIZED signature table
-    * from [[lshSignatures]]: chunk banding, corpus-side bucket cap,
-    * candidate join, and exact-cosine rerank — all signature/vector
-    * algebra, independently checkable by a SQL oracle over the written
-    * signature parquet plus the embeddings table.
+    * from [[lshSignatures]]: candidates share at least one
+    * `bandBits`-bit chunk of the hyperplane signature; exact cosine rerank
+    * within candidates. Trades recall for replacing the cross join with an
+    * equi-join on (chunk, chunk_val) — the 100-TB-shaped plan. Chunk
+    * banding, corpus-side bucket cap, candidate join, and rerank are all
+    * signature/vector algebra, independently checkable by a SQL oracle
+    * over the written signature parquet plus the embeddings table.
     */
   def lshTopKFromSigs(emb: DataFrame, sigs: DataFrame, k: Int,
                       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -132,6 +125,15 @@ object Knn {
                       maxBucket: Int = graft.text.Dedup.DefaultMaxBucket)
       : DataFrame = {
     val chunked = graft.text.Dedup.chunksOfSigs(sigs, bits, bandBits)
+    // corpus-side bucket cap (same guard as the Dedup LSH paths): one
+    // boilerplate cluster of near-identical vectors would otherwise make
+    // a single bucket O(|queries|·cluster) candidate pairs. The window
+    // count rides the banding shuffle. Candidate id pairs ride the join
+    // WITHOUT vector payloads — the nChunks-fold explode would otherwise
+    // push every vector through the shuffle nChunks times; vectors are
+    // fetched once at rerank. No broadcast hints: AQE broadcasts the
+    // small side at runtime, and at corpus-as-queries scale neither side
+    // is driver-sized.
     val cappedCorpus = chunked
       .withColumnRenamed("id", "nbr_id")
       .withColumn("bsz", count(lit(1)).over(
@@ -142,73 +144,27 @@ object Knn {
             Seq("chunk", "chunk_val"))
       .where(col("query_id") =!= col("nbr_id"))
       .select("query_id", "nbr_id").distinct()
-    rerankCosine(emb, emb, cands, k, idCol, vecCol, simDecimals)
-  }
-
-  /** Exact-cosine rerank of candidate (query_id, nbr_id) pairs against
-    * the vector tables, row_number-ranked (see [[rankWindow]]) — the
-    * shared verification tail of the LSH paths.
-    */
-  private[graft] def rerankCosine(corpus: DataFrame, queries: DataFrame,
-                                  cands: DataFrame, k: Int, idCol: String,
-                                  vecCol: String, simDecimals: Int)
-      : DataFrame = {
-    val c = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec"))
+    val c = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec"))
       .withColumn("nbr_norm", norm(col("nbr_vec")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val q = emb.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("q_norm", norm(col("q_vec")))
-    val scored = c
-      .join(cands, Seq("nbr_id"))
+    // `simDecimals ≥ 0` ranks on the ROUNDED similarity (ties broken by
+    // ascending neighbor id) so the ordering is reproducible across
+    // engines with different floating-point accumulation orders —
+    // required for cross-engine (DuckDB) oracles
+    val key = if (simDecimals >= 0) round(col("sim"), simDecimals) else col("sim")
+    c.join(cands, Seq("nbr_id"))
       .join(q, Seq("query_id"))
       .select(col("query_id"), col("nbr_id"),
               (vec_dot(col("q_vec"), col("nbr_vec")) /
                 (col("q_norm") * col("nbr_norm"))).as("sim"))
-    scored.where(!isnan(col("sim")))
-      .withColumn("rank", row_number().over(rankWindow(simDecimals)))
+      // NaN sims (zero-norm vectors) are dropped BEFORE ranking so this
+      // path agrees with TopKByScore (brute/IVF), which skips NaN keys —
+      // a NaN would otherwise sort FIRST under desc in the window (and in
+      // a SQL oracle), making the three cross-validated paths disagree
+      .where(!isnan(col("sim")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(key.desc, col("nbr_id").asc)))
       .where(col("rank") <= k)
-  }
-
-  /** LSH-bucketed approximate top-k: candidates share at least one
-    * `bandBits`-bit chunk of the hyperplane signature; exact cosine rerank
-    * within candidates. Trades recall for replacing the cross join with an
-    * equi-join on (chunk, chunk_val) — the 100-TB-shaped plan.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              bits: Int = 32, bandBits: Int = 8,
-              simDecimals: Int = -1,
-              maxBucket: Int = graft.text.Dedup.DefaultMaxBucket): DataFrame = {
-    require(bits % bandBits == 0)
-    val nChunks = bits / bandBits
-    val mask = (1L << bandBits) - 1
-    def chunkedIds(df: DataFrame, idAs: String) =
-      df.select(col(idCol).as(idAs), lshSignature(col(vecCol), bits).as("sig"))
-        .select(col(idAs),
-          posexplode(array((0 until nChunks).map { c =>
-            shiftright(col("sig"), c * bandBits).bitwiseAND(mask)
-          }: _*)).as(Seq("chunk", "chunk_val")))
-    // corpus-side bucket cap (same guard as the Dedup LSH paths): one
-    // boilerplate cluster of near-identical vectors would otherwise make
-    // a single bucket O(|queries|·cluster) candidate pairs. The window
-    // count rides the banding shuffle. Candidate id pairs ride the join
-    // WITHOUT vector payloads — the nChunks-fold explode would otherwise
-    // push every vector through the shuffle nChunks times; vectors are
-    // fetched once at rerank. No broadcast hints: AQE broadcasts the
-    // small side at runtime, and at corpus-as-queries scale neither side
-    // is driver-sized.
-    val cappedCorpus = chunkedIds(corpus, "nbr_id")
-      .withColumn("bsz", count(lit(1)).over(
-        Window.partitionBy("chunk", "chunk_val")))
-      .where(col("bsz") <= maxBucket).drop("bsz")
-    val cands = cappedCorpus
-      .join(chunkedIds(queries, "query_id"), Seq("chunk", "chunk_val"))
-      .where(col("query_id") =!= col("nbr_id"))
-      .select("query_id", "nbr_id").distinct()
-    // NaN sims (zero-norm vectors) are dropped BEFORE ranking inside
-    // rerankCosine so this path agrees with TopKByScore (brute/IVF),
-    // which skips NaN keys — a NaN would otherwise sort FIRST under desc
-    // in the window (and in a SQL oracle), making the three
-    // cross-validated paths disagree.
-    rerankCosine(corpus, queries, cands, k, idCol, vecCol, simDecimals)
   }
 }

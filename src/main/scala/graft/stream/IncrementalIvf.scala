@@ -1,6 +1,5 @@
 package graft.stream
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -83,11 +82,4 @@ object IncrementalIvf {
     */
   def deltas(spark: SparkSession, listsRoot: String): DataFrame =
     spark.read.parquet(listsRoot).drop("batch")
-
-  /** True when at least one batch delta has been published. */
-  def hasDeltas(spark: SparkSession, listsRoot: String): Boolean = {
-    val p = new Path(listsRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(_.isDirectory)
-  }
 }

@@ -23,7 +23,6 @@ final class Metrics extends StreamingQueryListener {
   def batches: Seq[BatchMetric] = buf.synchronized(buf.toSeq)
 
   def totalLateDropped: Long = batches.map(_.lateRowsDropped).sum
-  def totalInputRows: Long = batches.map(_.inputRows).sum
 
   /** p95 of micro-batch durations — the session-window latency evidence
     * required by BASELINE.md.

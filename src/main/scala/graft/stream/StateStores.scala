@@ -17,21 +17,16 @@ object StateStores {
   val RocksDb: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
   /** Switch the session to RocksDB state stores with changelog
     * checkpointing (incremental uploads instead of full snapshots).
     */
   def useRocksDb(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-  }
-
-  /** Restore the default heap-backed provider. */
-  def useDefault(spark: SparkSession): Unit = {
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.unset(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    spark.conf.set(ProviderKey, RocksDb)
+    spark.conf.set(ChangelogKey, "true")
   }
 
   /** Run `body` (which must START its streaming queries inside — the
@@ -40,24 +35,12 @@ object StateStores {
     * requires this provider.
     */
   def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevCl = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val prev = Seq(ProviderKey, ChangelogKey).map(k => k -> spark.conf.getOption(k))
     useRocksDb(spark)
     try body
-    finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * string/md5 expressions only (bit-exact in the DuckDB oracle — no
   * cross-engine float drift), every kernel relational and codegen'd (no
   * UDFs, no higher-order lambdas that recapture computed arrays — see the
-  * O(L²) note on [[TextAnalysis.winnowedFingerprints]]).
+  * O(L²) note on [[TextAnalysis.gramHashes]]).
   */
 object Curation {
 
@@ -33,7 +33,7 @@ object Curation {
     * corpus-tokens-sized sort shuffle just to see adjacent words. The
     * shifted slices sit as plain (non-lambda) arguments of zip_with, so
     * nothing re-evaluates per element (the O(L²) captured-subtree trap
-    * documented on [[TextAnalysis.winnowedFingerprints]] does not apply);
+    * documented on [[TextAnalysis.gramHashes]] does not apply);
     * `pos` is the 0-based start position via posexplode. Trailing
     * positions with fewer than n tokens never materialize — the slices
     * are already trimmed to size−(n−1).

@@ -52,16 +52,6 @@ object Dedup {
       .dropDuplicates("fp")
       .join(broadcast(baseFps), Seq("fp"), "left_anti")
 
-  /** Word shingles (k-grams) of the normalized text; distinct per doc. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = split(trim(regexp_replace(lower(text), "\\s+", " ")), " ")
-    array_distinct(
-      filter(
-        transform(toks, (_, i) =>
-          when(i + k <= size(toks), concat_ws(" ", slice(toks, i + 1, lit(k))))),
-        s => s.isNotNull))
-  }
-
   /** Distinct shingle hash set per doc, built WITHOUT materializing
     * shingle strings: tokens are hashed once, a shingle hash is the
     * xxhash64 of its k token hashes (40 bytes, no concat_ws string
@@ -78,10 +68,6 @@ object Dedup {
           when(i + k <= size(tokenHashes),
                xxhash64((0 until k).map(j => get(tokenHashes, i + j)): _*))),
         x => x.isNotNull))
-
-  /** String-shingle variant kept for the Jaccard-on-strings API. */
-  def shingleHashSet(text: Column, k: Int): Column =
-    array_distinct(transform(shingles(text, k), s => xxhash64(s)))
 
   /** MinHash signature over pre-hashed shingles: sig[h] = min over
     * xxhash64(h, base) — per-seed rehash of an 8-byte long, codegen'd.
@@ -151,9 +137,7 @@ object Dedup {
     * ones the join drops — [[minhashOversizeBuckets]] reads them).
     */
   def minhashBands(sh: DataFrame, numHashes: Int = 32,
-                   bands: Int = 8): DataFrame = bandedOf(sh, numHashes, bands)
-
-  private def bandedOf(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+                   bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     sh.withColumn("sig", minhashSignature(col("sh"), numHashes))
@@ -176,10 +160,6 @@ object Dedup {
       .distinct()
   }
 
-  private def candidatesFrom(sh: DataFrame, numHashes: Int, bands: Int,
-                             maxBucket: Int = DefaultMaxBucket): DataFrame =
-    candidatesFromBands(bandedOf(sh, numHashes, bands), maxBucket)
-
   /** Default LSH bucket-size cap: 10⁴ members = ≤ 5·10⁷ pairs per bucket,
     * bounded work per task; raise explicitly for corpora where genuine
     * (non-exact-dup) clusters are expected to be larger.
@@ -195,10 +175,13 @@ object Dedup {
                              textCol: String = "text", shingleK: Int = 5,
                              numHashes: Int = 32, bands: Int = 8,
                              maxBucket: Int = DefaultMaxBucket): DataFrame =
-    oversize(bandedOf(shingleTable(docs, idCol, textCol, shingleK),
-                      numHashes, bands),
+    oversize(minhashBands(shingleTable(docs, idCol, textCol, shingleK),
+                          numHashes, bands),
              Seq("band", "band_hash"), maxBucket)
 
+  /** Shingle-set Jaccard for candidate pairs — the verification step after
+    * LSH (computed on the hashed shingle sets of [[shingleTable]]).
+    */
   private[graft] def verifyFrom(sh: DataFrame, candidates: DataFrame): DataFrame =
     candidates
       .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -215,46 +198,13 @@ object Dedup {
                         shingleK: Int = 5, numHashes: Int = 32,
                         bands: Int = 8,
                         maxBucket: Int = DefaultMaxBucket): DataFrame =
-    candidatesFrom(shingleTable(docs, idCol, textCol, shingleK), numHashes,
-                   bands, maxBucket)
+    candidatesFromBands(
+      minhashBands(shingleTable(docs, idCol, textCol, shingleK), numHashes,
+                   bands),
+      maxBucket)
 
-  /** Shingle-set Jaccard for candidate pairs — the verification step after
-    * LSH (computed on hashed shingle sets).
-    */
-  def jaccardVerify(docs: DataFrame, candidates: DataFrame,
-                    idCol: String, textCol: String, shingleK: Int = 5)
-      : DataFrame =
-    verifyFrom(shingleTable(docs, idCol, textCol, shingleK), candidates)
-
-  /** End-to-end MinHash near-dup pipeline: LSH candidates → Jaccard ≥
-    * threshold. The shingle-hash table is computed once and shared
-    * across the candidate and verify stages (the reference's cache-then-
-    * pair pattern, analysis.py:235-239).
-    */
-  def minhashNearDups(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", shingleK: Int = 5,
-                      numHashes: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.7,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sh = shingleTable(docs, idCol, textCol, shingleK)
-    verifyFrom(sh, candidatesFrom(sh, numHashes, bands, maxBucket))
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** Candidates + jaccard without threshold, best-first — the queries()
-    * surface (never empty when any candidate exists).
-    */
-  def minhashRanked(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", shingleK: Int = 5,
-                    numHashes: Int = 32, bands: Int = 8, limit: Int = 200)
-      : DataFrame = {
-    val sh = shingleTable(docs, idCol, textCol, shingleK)
-    verifyFrom(sh, candidatesFrom(sh, numHashes, bands))
-      .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
-      .limit(limit)
-  }
-
-  /** [[minhashRanked]]'s post-hash half over PRE-MATERIALIZED signature
+  /** MinHash candidates + Jaccard without threshold, best-first (never
+    * empty when any candidate exists), over PRE-MATERIALIZED signature
     * tables: `sh` = (id, sh) from [[shingleTable]], `banded` = (id, band,
     * band_hash) from [[minhashBands]] — typically both read back from the
     * parquet a pipeline (or [[graft.ops.OracleSig]]) wrote. Everything
@@ -268,11 +218,13 @@ object Dedup {
       .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
       .limit(limit)
 
-  /** [[minhashNearDups]]'s post-hash half over pre-materialized signature
-    * tables (same contract as [[minhashRankedFrom]]): thresholded
-    * verified pairs (id_a < id_b) — bucket cap, banding self-join, and
-    * Jaccard verify are all hash-free and SQL-oracle-checkable over the
-    * same parquet.
+  /** MinHash near-dup pairs: LSH candidates → shingle-set Jaccard ≥
+    * threshold, over pre-materialized signature tables (same contract as
+    * [[minhashRankedFrom]]): thresholded verified pairs (id_a < id_b).
+    * One `sh` table feeds both the candidate and the verify stage (the
+    * reference's cache-then-pair pattern, analysis.py:235-239); bucket
+    * cap, banding self-join, and Jaccard verify are all hash-free and
+    * SQL-oracle-checkable over the same parquet.
     */
   def minhashNearDupsFrom(sh: DataFrame, banded: DataFrame,
                           threshold: Double,
@@ -328,24 +280,11 @@ object Dedup {
       .withColumn("is_keeper", row_number().over(keeperOrder) === 1)
   }
 
-  /** Embedding-cosine near-duplicates: random-hyperplane LSH buckets the
-    * corpus against itself, exact cosine verifies candidates ≥ threshold —
-    * the vector-space member of the dedup family (pairs with id_a < id_b).
-    *
-    * Scale shape: the banding self-join carries ONLY ids (the chunk
-    * explode would otherwise copy every vector nChunks times through the
-    * shuffle, and the old pair-level distinct() shuffled two full vectors
-    * per row); vectors and norms are fetched once per side at rerank.
-    * Buckets above `maxBucket` are dropped ([[capBuckets]]).
-    */
-  /** Signature chunks of an embedding table — the shared banding input of
-    * [[embeddingNearDups]] and [[embeddingOversizeBuckets]] (one
-    * definition so the dropped-bucket side output always corresponds to
-    * the buckets the candidate join actually sees).
-    */
-  /** Chunk explode of a hyperplane-signature table (id, sig) — the shared
-    * post-hash banding step of the vector-LSH family ([[embeddingNearDups]]
-    * and [[graft.sim.Knn.lshTopKFromSigs]]).
+  /** Chunk explode of a hyperplane-signature table (id, sig) — the one
+    * banding step of the vector-LSH family: [[embeddingNearDupsFromSigs]],
+    * [[embeddingOversizeBuckets]] and [[graft.sim.Knn.lshTopKFromSigs]]
+    * all band through it, so the dropped-bucket side output always
+    * corresponds to the buckets the candidate join actually sees.
     */
   private[graft] def chunksOfSigs(sigs: DataFrame, bits: Int,
                                   bandBits: Int): DataFrame = {
@@ -358,29 +297,19 @@ object Dedup {
       }: _*)).as(Seq("chunk", "chunk_val")))
   }
 
-  private def embChunks(emb: DataFrame, idCol: String, vecCol: String,
-                        bits: Int, bandBits: Int): DataFrame =
-    chunksOfSigs(
-      emb.select(col(idCol).as("id"),
-                 graft.sim.Knn.lshSignature(col(vecCol), bits).as("sig")),
-      bits, bandBits)
-
-  def embeddingNearDups(emb: DataFrame, idCol: String = "vec_id",
-                        vecCol: String = "embedding",
-                        threshold: Double = 0.95,
-                        bits: Int = 32, bandBits: Int = 8,
-                        maxBucket: Int = DefaultMaxBucket): DataFrame =
-    embeddingNearDupsFromSigs(
-      emb,
-      emb.select(col(idCol).as("id"),
-                 graft.sim.Knn.lshSignature(col(vecCol), bits).as("sig")),
-      idCol, vecCol, threshold, bits, bandBits, maxBucket)
-
-  /** [[embeddingNearDups]]'s post-hash half over a pre-materialized
-    * hyperplane-signature table (id, sig) from
-    * [[graft.sim.Knn.lshSignatures]] — banding, cap, candidate join, and
-    * the exact-cosine verify are signature/vector algebra, SQL-oracle-
+  /** Embedding-cosine near-duplicates: random-hyperplane LSH buckets the
+    * corpus against itself, exact cosine verifies candidates ≥ threshold —
+    * the vector-space member of the dedup family (pairs with id_a < id_b).
+    * Runs over a pre-materialized hyperplane-signature table (id, sig)
+    * from [[graft.sim.Knn.lshSignatures]] — banding, cap, candidate join,
+    * and the exact-cosine verify are signature/vector algebra, SQL-oracle-
     * checkable over the written parquet plus the embeddings table.
+    *
+    * Scale shape: the banding self-join carries ONLY ids (the chunk
+    * explode would otherwise copy every vector nChunks times through the
+    * shuffle, and the old pair-level distinct() shuffled two full vectors
+    * per row); vectors and norms are fetched once per side at rerank.
+    * Buckets above `maxBucket` are dropped ([[capBuckets]]).
     */
   def embeddingNearDupsFromSigs(emb: DataFrame, sigs: DataFrame,
                                 idCol: String = "vec_id",
@@ -484,7 +413,8 @@ object Dedup {
                                vecCol: String = "embedding",
                                bits: Int = 32, bandBits: Int = 8,
                                maxBucket: Int = DefaultMaxBucket): DataFrame =
-    oversize(embChunks(emb, idCol, vecCol, bits, bandBits),
+    oversize(chunksOfSigs(graft.sim.Knn.lshSignatures(emb, idCol, vecCol, bits),
+                          bits, bandBits),
              Seq("chunk", "chunk_val"), maxBucket)
 
   /** 64-bit SimHash signature per doc: bit j is the sign of
@@ -510,22 +440,34 @@ object Dedup {
     sums.select(col("id"), sig.as("simhash"))
   }
 
-  /** SimHash near-dup candidates: docs sharing any of the four 16-bit
-    * signature chunks (guarantees recall for hamming distance ≤ 3 across
-    * chunks), verified by exact hamming ≤ maxHamming via bit_count(xor).
+  /** SimHash near-dups over a pre-materialized signature table (id,
+    * simhash) from [[simhash]]: candidates are docs sharing any of the
+    * four 16-bit signature chunks (guarantees recall for hamming distance
+    * ≤ 3 across chunks), verified by exact hamming ≤ maxHamming via
+    * bit_count(xor). Chunk explode, bucket cap, candidate join, and the
+    * hamming verify are all signature-value algebra — SQL-oracle-
+    * checkable over the written parquet ([[graft.ops.OracleSig]]).
     */
-  def simhashNearDups(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", maxHamming: Int = 6,
-                      maxBucket: Int = DefaultMaxBucket)
-      : DataFrame =
-    simhashNearDupsFrom(simhash(docs, idCol, textCol), maxHamming, maxBucket)
+  def simhashNearDupsFrom(sigs: DataFrame, maxHamming: Int = 6,
+                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val chunked = capBuckets(
+      sigs.select(
+        col("id"), col("simhash"),
+        posexplode(array((0 until 4).map { c =>
+          shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL)
+        }: _*)).as(Seq("chunk", "chunk_val"))),
+      Seq("chunk", "chunk_val"), maxBucket)
+    chunked.as("a")
+      .join(chunked.as("b"),
+        col("a.chunk") === col("b.chunk") &&
+        col("a.chunk_val") === col("b.chunk_val") &&
+        col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      .distinct()
+      .where(col("hamming") <= maxHamming)
+  }
 
-  /** [[simhashNearDups]]'s post-hash half over a pre-materialized
-    * signature table (id, simhash) from [[simhash]]: chunk explode,
-    * bucket cap, candidate join, and the bit_count(xor) hamming verify
-    * are all signature-value algebra — SQL-oracle-checkable over the
-    * written parquet ([[graft.ops.OracleSig]]).
-    */
   /** C4-style line-level deduplication: split every document into lines
     * on `delim`, keep only the FIRST corpus-order occurrence (lowest
     * (id, line_idx)) of each distinct line, and reassemble — the
@@ -571,25 +513,5 @@ object Dedup {
               x => x.getField("keep")),
             x => x.getField("line")),
           delim).as(textCol))
-  }
-
-  def simhashNearDupsFrom(sigs: DataFrame, maxHamming: Int = 6,
-                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val chunked = capBuckets(
-      sigs.select(
-        col("id"), col("simhash"),
-        posexplode(array((0 until 4).map { c =>
-          shiftright(col("simhash"), c * 16).bitwiseAND(0xffffL)
-        }: _*)).as(Seq("chunk", "chunk_val"))),
-      Seq("chunk", "chunk_val"), maxBucket)
-    chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") &&
-        col("a.chunk_val") === col("b.chunk_val") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
   }
 }

@@ -28,32 +28,19 @@ object TextAnalysis {
   def bpeishTokenCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+")).cast("int")
 
-  /** Winnowed rolling-hash document fingerprints: hash every character
-    * k-gram, then keep the MINIMUM hash of each sliding window of `w`
-    * consecutive k-grams (the winnowing scheme — guarantees any shared
-    * substring of length ≥ k+w−1 between two documents yields at least
-    * one shared fingerprint). Output: one row per input doc with a
-    * sorted distinct fingerprint array (empty when text shorter than k).
-    *
-    * Shape note: the windowed minima are computed RELATIONALLY
-    * (posexplode → sliding rowsBetween window → collect_set), not with a
-    * nested higher-order function. A lambda that captures the computed
-    * gram array re-evaluates that whole subtree PER ELEMENT — measured
-    * O(L²·k) per document, 553 s for 2,000 docs at sf0.1 — whereas the
-    * Generate node consumes the array once per row. xxhash64-based, so
-    * validated by planted fixtures rather than a SQL oracle.
-    */
-  def winnowedFingerprints(docs: DataFrame, idCol: String = "doc_id",
-                           textCol: String = "text",
-                           k: Int = 8, w: Int = 4): DataFrame =
-    winnowFromGrams(docs, gramHashes(docs, idCol, textCol, k), idCol, w)
-
   /** The character-k-gram rolling-hash table (idCol, pos, h) — the
     * hash-dependent half of the winnowing pipeline, and its
     * materialization point ([[graft.ops.OracleSig]]): everything
     * downstream ([[winnowFromGrams]] — sliding minima, tail trim,
     * distinct) is plain window algebra a SQL oracle can recompute over
     * the written parquet.
+    *
+    * Shape note: the grams leave as ROWS (posexplode) and the windowed
+    * minima are computed relationally, not with a nested higher-order
+    * function. A lambda that captures the computed gram array
+    * re-evaluates that whole subtree PER ELEMENT — measured O(L²·k) per
+    * document, 553 s for 2,000 docs at sf0.1 — whereas the Generate node
+    * consumes the array once per row.
     */
   def gramHashes(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text", k: Int = 8): DataFrame = {
@@ -66,10 +53,13 @@ object TextAnalysis {
     docs.select(col(idCol), posexplode(grams).as(Seq("pos", "h")))
   }
 
-  /** The winnowing (post-hash) half over a pre-materialized gram-hash
-    * table from [[gramHashes]]: minimum of each sliding window of `w`
-    * consecutive gram hashes, deduped and sorted per doc; docs absent
-    * from `grams` (text shorter than k) get an empty fingerprint set.
+  /** Winnowed rolling-hash document fingerprints over a pre-materialized
+    * gram-hash table from [[gramHashes]]: keep the MINIMUM hash of each
+    * sliding window of `w` consecutive k-grams (the winnowing scheme —
+    * guarantees any shared substring of length ≥ k+w−1 between two
+    * documents yields at least one shared fingerprint). Output: one row
+    * per input doc with a sorted distinct fingerprint array; docs absent
+    * from `grams` (text shorter than k) get an empty one.
     */
   def winnowFromGrams(docs: DataFrame, grams: DataFrame,
                       idCol: String = "doc_id", w: Int = 4): DataFrame = {
@@ -137,22 +127,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "\\s+", " ")))
 
-  /** Corpus word-n-gram count table with per-source top-k — the canonical
-    * count-based LM / corpus-statistics workload (and the df side of
-    * TF-IDF): one row per (source, ngram) among each source's `k` most
-    * frequent n-grams, with its total occurrence count and document
-    * frequency. Ordering ties break on the n-gram string, so the result
-    * is fully deterministic.
-    *
-    * Scale shape: n-gram generation is ROW-LOCAL — `zip_with` over n
-    * shifted `slice`s of the token array, whose lambda touches only its
-    * own lambda variables (a lambda CAPTURING the computed token array
-    * would re-evaluate the split per element — the measured O(L²)
-    * CollapseProject trap, see [[winnowedFingerprints]]) — so the only
-    * shuffles are the count aggregation (map-side partial combine over
-    * exploded grams) and the per-source top-k window, which runs over the
-    * already-aggregated vocabulary-sized table, not the corpus.
-    */
   /** TF-IDF-style keyword extraction, float-free: the top-`k` terms per
     * document ranked by `score_ppm = tf · 1e6 div df` (term frequency in
     * the doc over corpus document frequency, parts-per-million integer
@@ -180,6 +154,22 @@ object TextAnalysis {
       .select("doc_id", "term", "tf", "df", "score_ppm", "rank")
   }
 
+  /** Corpus word-n-gram count table with per-source top-k — the canonical
+    * count-based LM / corpus-statistics workload (and the df side of
+    * TF-IDF): one row per (source, ngram) among each source's `k` most
+    * frequent n-grams, with its total occurrence count and document
+    * frequency. Ordering ties break on the n-gram string, so the result
+    * is fully deterministic.
+    *
+    * Scale shape: n-gram generation is ROW-LOCAL — `zip_with` over n
+    * shifted `slice`s of the token array, whose lambda touches only its
+    * own lambda variables (a lambda CAPTURING the computed token array
+    * would re-evaluate the split per element — the measured O(L²)
+    * CollapseProject trap, see [[gramHashes]]) — so the only
+    * shuffles are the count aggregation (map-side partial combine over
+    * exploded grams) and the per-source top-k window, which runs over the
+    * already-aggregated vocabulary-sized table, not the corpus.
+    */
   def wordNgramTopK(docs: DataFrame, n: Int = 2, k: Int = 5): DataFrame = {
     require(n >= 2, "use tokenCount for unigrams")
     val toks = split(col("text"), " ")

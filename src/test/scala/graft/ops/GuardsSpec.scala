@@ -67,8 +67,9 @@ class GuardsSpec extends SparkSuite {
       (2000L, "an unrelated document about distributed query engines and shuffles"),
       (2001L, "an unrelated document about distributed query engines and sorts"))
     val docs = (cluster ++ nearPair).toDF("doc_id", "text")
-    val capped = Dedup.minhashNearDups(docs, threshold = 0.0, maxBucket = 50)
-      .collect()
+    val sh = Dedup.shingleTable(docs)
+    val capped = Dedup.minhashNearDupsFrom(sh, Dedup.minhashBands(sh), 0.0,
+                                           maxBucket = 50).collect()
     // without the cap the cluster alone yields 1000*999/2 ≈ 5·10⁵ pairs
     assert(capped.length < 100, s"candidates not bounded: ${capped.length}")
     assert(capped.exists(r => r.getLong(0) == 2000L && r.getLong(1) == 2001L),

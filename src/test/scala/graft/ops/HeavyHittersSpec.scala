@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
@@ -75,10 +77,20 @@ class HeavyHittersSpec extends SparkSuite {
   }
 
   test("merge keeps the undercount-only invariant") {
-    val mg = new MisraGries(2)
-    val a = Seq("x", "x", "x", "y", "z", "z").foldLeft(mg.zero)(mg.reduce)
-    val b = Seq("x", "w", "w", "w", "y", "y").foldLeft(mg.zero)(mg.reduce)
-    val m = mg.merge(a, b)
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.MgAggBuf
+    def sketch(items: String*) = {
+      val buf = new MgAggBuf(2)
+      items.foreach(i => buf.addOne(UTF8String.fromString(i)))
+      buf
+    }
+    // the production merge step of MgSketchAgg: counter-weight adds, then
+    // the mergeable-summaries reduction
+    val a = sketch("x", "x", "x", "y", "z", "z")
+    val b = sketch("x", "w", "w", "w", "y", "y")
+    b.m.forEach((k, c) => a.addCount(k, c.v))
+    a.reduceIfOver()
+    val m = a.m.asScala.map { case (k, c) => k.toString -> c.v }.toMap
     assert(m.size <= 2)
     // true counts: x=4, w=3, y=3, z=2 (N=12, bound N/3=4) — every
     // reported count must undercount its true frequency

@@ -88,7 +88,9 @@ class KnnSpec extends SparkSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nbr_id"))).toSet
     val brute = pairs(Knn.bruteTopK(vecs, q, 5))
-    val ivf = pairs(Ivf.ivfTopK(vecs, q, 5, nClusters = 6, nprobe = 2))
+    val cents = Ivf.trainCentroids(vecs, nClusters = 6)
+    val ivf = pairs(Ivf.ivfTopKWithLists(vecs, q, cents,
+      Ivf.invertedLists(vecs, cents), 5, nprobe = 2))
     val recall = (brute intersect ivf).size.toDouble / brute.size
     assert(recall >= 0.8, s"IVF recall $recall")
   }
@@ -117,7 +119,8 @@ class KnnSpec extends SparkSuite {
                                     simDecimals = 6))
     val cents = Ivf.trainCentroids(uniformVecs, nClusters = 16, iters = 2,
                                    sampleFactor = 12)
-    val ivf = pairs(Ivf.ivfTopKWith(uniformVecs, uniformVecs, cents, 5,
+    val ivf = pairs(Ivf.ivfTopKWithLists(uniformVecs, uniformVecs, cents,
+      Ivf.invertedLists(uniformVecs, cents), 5,
       nprobe = 4, simDecimals = 6, nprobeMax = 7, escalateMargin = 0.35))
     val recall = (brute intersect ivf).size.toDouble / brute.size
     assert(recall >= 0.8, s"adaptive IVF recall $recall on uniform corpus")
@@ -162,7 +165,8 @@ class KnnSpec extends SparkSuite {
     // tight probe cap → the 0.35 margin band overflows for most queries
     // on the uniform corpus → they fall back to exact, so recall clears
     // 0.9 even where capped adaptive probing could not
-    val ivf = pairs(Ivf.ivfTopKWith(uniformVecs, uniformVecs, cents, 5,
+    val ivf = pairs(Ivf.ivfTopKWithLists(uniformVecs, uniformVecs, cents,
+      Ivf.invertedLists(uniformVecs, cents), 5,
       nprobe = 2, simDecimals = 6, nprobeMax = 3, escalateMargin = 0.35,
       fallbackMargin = 0.35))
     val recall = (brute intersect ivf).size.toDouble / brute.size
@@ -205,7 +209,8 @@ class KnnSpec extends SparkSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nbr_id"))).toSet
     val brute = pairs(Knn.bruteTopK(vecs, q, 5))
-    val lsh = pairs(Knn.lshTopK(vecs, q, 5, bits = 16, bandBits = 4))
+    val lsh = pairs(Knn.lshTopKFromSigs(vecs, Knn.lshSignatures(vecs, bits = 16),
+      5, bits = 16, bandBits = 4).where(col("query_id") < 10))
     val recall = (brute intersect lsh).size.toDouble / brute.size
     assert(recall >= 0.8, s"LSH recall $recall")
   }

@@ -1,14 +1,17 @@
 package graft.sim
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSuite
 import graft.text.{Dedup, TextAnalysis}
 
-/** The from-signatures (materialized post-hash) entry points must be
-  * row-identical to their inline one-shot twins — the contract that lets
-  * the driver queries compute from OracleSig parquet while DedupSpec /
-  * KnnSpec keep pinning the inline pipelines. One path additionally
-  * round-trips its signature tables through parquet, the exact
-  * materialization shape the oracle reads.
+/** Each hash-free `…From` half must give the same rows over signature
+  * (or inverted-list) tables round-tripped through parquet as over the
+  * same tables in memory — the parquet round trip is exactly the shape
+  * the driver queries and the [[graft.ops.OracleSig]] oracles read.
+  * Test names call the in-memory side by its one-shot pipeline name
+  * (`minhashRanked`, `lshTopK`, …): signature builder + `…From` half,
+  * with nothing written in between.
   */
 class SigParitySpec extends SparkSuite {
 
@@ -17,54 +20,60 @@ class SigParitySpec extends SparkSuite {
   private lazy val emb =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
+  private lazy val tmp =
+    java.nio.file.Files.createTempDirectory("sig_parity").toString
+
+  private def roundTrip(df: DataFrame, name: String): DataFrame = {
+    df.write.parquet(s"$tmp/$name")
+    spark.read.parquet(s"$tmp/$name")
+  }
+
+  private def rows(df: DataFrame) =
     df.collect().map(_.toString).sorted.toSeq
 
   test("minhashRankedFrom over parquet-round-tripped tables == minhashRanked") {
-    val tmp = java.nio.file.Files.createTempDirectory("sig_parity").toString
-    val sh0 = Dedup.shingleTable(docs)
-    val bands0 = Dedup.minhashBands(sh0)
-    sh0.write.parquet(s"$tmp/sh")
-    bands0.write.parquet(s"$tmp/bands")
-    val sh = spark.read.parquet(s"$tmp/sh")
-    val bands = spark.read.parquet(s"$tmp/bands")
-    assert(rows(Dedup.minhashRankedFrom(sh, bands)) ==
-           rows(Dedup.minhashRanked(docs)))
+    val sh = Dedup.shingleTable(docs)
+    val bands = Dedup.minhashBands(sh)
+    val got = Dedup.minhashRankedFrom(roundTrip(sh, "sh"),
+                                      roundTrip(bands, "bands"))
+    assert(rows(got) == rows(Dedup.minhashRankedFrom(sh, bands)))
   }
 
   test("simhashNearDupsFrom(simhash) == simhashNearDups") {
-    assert(rows(Dedup.simhashNearDupsFrom(Dedup.simhash(docs), maxHamming = 16)) ==
-           rows(Dedup.simhashNearDups(docs, maxHamming = 16)))
+    val sigs = Dedup.simhash(docs)
+    assert(rows(Dedup.simhashNearDupsFrom(roundTrip(sigs, "simhash"), maxHamming = 16)) ==
+           rows(Dedup.simhashNearDupsFrom(sigs, maxHamming = 16)))
   }
 
   test("lshTopKFromSigs(lshSignatures) == lshTopK on the self-kNN workload") {
     val sigs = Knn.lshSignatures(emb)
-    assert(rows(Knn.lshTopKFromSigs(emb, sigs, 3, simDecimals = 6)
-                  .select("query_id", "nbr_id", "rank")) ==
-           rows(Knn.lshTopK(emb, emb, 3, simDecimals = 6)
-                  .select("query_id", "nbr_id", "rank")))
+    def top(s: DataFrame) =
+      rows(Knn.lshTopKFromSigs(emb, s, 3, simDecimals = 6)
+             .select("query_id", "nbr_id", "rank"))
+    assert(top(roundTrip(sigs, "lsh_sigs")) == top(sigs))
   }
 
   test("embeddingNearDupsFromSigs == embeddingNearDups") {
     val sigs = Knn.lshSignatures(emb)
-    assert(rows(Dedup.embeddingNearDupsFromSigs(emb, sigs, threshold = -1.0)) ==
-           rows(Dedup.embeddingNearDups(emb, threshold = -1.0)))
+    assert(rows(Dedup.embeddingNearDupsFromSigs(emb, roundTrip(sigs, "emb_sigs"),
+                                                threshold = -1.0)) ==
+           rows(Dedup.embeddingNearDupsFromSigs(emb, sigs, threshold = -1.0)))
   }
 
   test("winnowFromGrams(gramHashes) == winnowedFingerprints") {
-    assert(rows(TextAnalysis.winnowFromGrams(docs, TextAnalysis.gramHashes(docs))) ==
-           rows(TextAnalysis.winnowedFingerprints(docs)))
+    val grams = TextAnalysis.gramHashes(docs)
+    assert(rows(TextAnalysis.winnowFromGrams(docs, roundTrip(grams, "grams"))) ==
+           rows(TextAnalysis.winnowFromGrams(docs, grams)))
   }
 
   test("ivfTopKWithLists(precomputed lists) == ivfTopKWith") {
     val cents = Ivf.trainCentroids(emb, nClusters = 8, iters = 1,
                                    sampleFactor = 10)
     val lists = Ivf.invertedLists(emb, cents)
-    assert(rows(Ivf.ivfTopKWithLists(emb, emb, cents, lists, 3,
-                                     nprobe = 2, simDecimals = 6)
-                  .select("query_id", "nbr_id", "rank")) ==
-           rows(Ivf.ivfTopKWith(emb, emb, cents, 3, nprobe = 2,
-                                simDecimals = 6)
-                  .select("query_id", "nbr_id", "rank")))
+    def top(c: DataFrame, l: DataFrame) =
+      rows(Ivf.ivfTopKWithLists(emb, emb, c, l, 3, nprobe = 2, simDecimals = 6)
+             .select("query_id", "nbr_id", "rank"))
+    assert(top(roundTrip(cents, "cents"), roundTrip(lists, "lists")) ==
+           top(cents, lists))
   }
 }

@@ -74,11 +74,8 @@ class CsrParitySpec extends SparkSuite {
       spark.table(name).collect().map(_.toSeq.mkString("|")).sorted.toSeq
     }
     val heap = run("csr_heap")
-    StateStores.useRocksDb(spark)
-    try {
-      val rocks = run("csr_rocks")
-      assert(rocks == heap && rocks.nonEmpty)
-    } finally StateStores.useDefault(spark)
+    val rocks = StateStores.withRocksDb(spark)(run("csr_rocks"))
+    assert(rocks == heap && rocks.nonEmpty)
   }
 
   test("CsrState final summaries == ConvCsrAggregator batch results") {

@@ -28,7 +28,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash LSH finds the planted near-dup pair") {
-    val nd = Dedup.minhashNearDups(docs, threshold = 0.5)
+    val sh = Dedup.shingleTable(docs)
+    val nd = Dedup.minhashNearDupsFrom(sh, Dedup.minhashBands(sh), 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd.contains((0L, 2L)) || nd.contains((0L, 1L)))
     // near-dup 2 must surface against one of the identical trio
@@ -80,7 +81,7 @@ class DedupSpec extends SparkSuite {
 
   test("jaccard: identical docs = 1.0, unrelated < 0.2") {
     val cands = Seq((0L, 1L), (0L, 3L)).toDF("id_a", "id_b")
-    val j = Dedup.jaccardVerify(docs, cands, "doc_id", "text")
+    val j = Dedup.verifyFrom(Dedup.shingleTable(docs), cands)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(j((0L, 1L)) == 1.0)
     assert(j((0L, 3L)) < 0.2)
@@ -102,7 +103,8 @@ class DedupSpec extends SparkSuite {
     }
     val planted = base :+ (100L, base.head._2)
     val df = planted.toDF("vec_id", "embedding")
-    val nd = Dedup.embeddingNearDups(df, threshold = 0.99)
+    val nd = Dedup.embeddingNearDupsFromSigs(df,
+        graft.sim.Knn.lshSignatures(df), threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd.contains((0L, 100L)))
   }
@@ -169,7 +171,7 @@ class DedupSpec extends SparkSuite {
       (3L, "nothing in common with the others at all, zq xv jk wm pq rs tuv"),
       (4L, "tiny")) // shorter than k → empty fingerprint set
       .toDF("doc_id", "text")
-    val fp = graft.text.TextAnalysis.winnowedFingerprints(docs)
+    val fp = TextAnalysis.winnowFromGrams(docs, TextAnalysis.gramHashes(docs))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     assert((fp(1L) intersect fp(2L)).nonEmpty, "shared substring must collide")
     assert((fp(1L) intersect fp(3L)).isEmpty, "disjoint docs must not collide")

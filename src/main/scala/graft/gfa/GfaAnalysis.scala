@@ -49,15 +49,6 @@ object GfaAnalysis {
       sum(aggregate(map_values(col("tags")), lit(0),
         (acc, v) => acc + length(v))).cast("long").as("tags_bytes_total"))
 
-  /** Q5 directed-bidirected misuse probe (analysis.py:19-30): distance
-    * functions on a DIRECTED graph whose nodes carry the `:+`/`:-`
-    * bidirected suffix almost always want the undirected view. Cheap
-    * filter+limit(1) probe; callers warn when true.
-    */
-  def isDirectedBidirected(edges: DataFrame, opts: GfaOptions): Boolean =
-    opts.graphDirected &&
-      !edges.where(col("src").rlike(":[+-]$")).limit(1).isEmpty
-
   /** Q2 sequence_distance (analysis.py:68-113): min hop/weighted distance
     * between the node sets carrying exactly `seqA` / `seqB` as sequence
     * payload. The reference always runs Dijkstra with weight="weight"

@@ -42,7 +42,7 @@ object GfaGraph {
     * (from_id, from_orient, to_id, to_orient, weight, lineno?).
     * Weight = numeric tag value when `weightTag` is set (builders.py:205-209).
     */
-  def rawEdges(lines: DataFrame, opts: GfaOptions): DataFrame = {
+  private def rawEdges(lines: DataFrame, opts: GfaOptions): DataFrame = {
     val keep = Seq("from_id", "from_orient", "to_id", "to_orient", "tags") ++
       (if (lines.columns.contains("lineno")) Seq("lineno") else Nil)
     val parts = Seq(

@@ -47,8 +47,7 @@ object GfaParse {
 
   /** Malformed-record side output (P13; parser.py:208-209, 231-232,
     * 251-252, 299-300, 345-346). The reference raises ValueError; the
-    * engine's permissive mode routes these to a rejects stream, strict mode
-    * wraps this in `raise_error`.
+    * engine routes these to a countable rejects side output instead.
     */
   def malformedRecords(lines: DataFrame): DataFrame = {
     val r = records(lines).withColumn("nf", size(col("fields")))
@@ -60,40 +59,24 @@ object GfaParse {
       (col("rtype") === "C" && col("nf") < 5))
   }
 
-  /** Strict mode (P13): fail the job on the first malformed record with
-    * the reference's error shape (`Malformed X record`, parser.py:208 etc.)
-    * instead of routing to the rejects side output.
-    */
-  def strictMalformedCheck(lines: DataFrame): DataFrame = {
-    val r = records(lines).withColumn("nf", size(col("fields")))
-    r.select(
-      when((col("rtype") === "L" && col("nf") < 5) ||
-             (col("rtype").isin("P", "O") && col("nf") < 3) ||
-             (col("rtype") === "E" && col("nf") < 6) ||
-             (col("rtype") === "C" && col("nf") < 5),
-            raise_error(concat(lit("Malformed "), col("rtype"), lit(" record"))))
-        .as("_check"), col("rtype"), col("fields"))
-  }
-
   // -------------------------------------------------------------- tags
 
   /** GFA tag list → map tag -> "TYPE:VALUE" (P3; parser.py:179-204).
     * A field is a tag iff it splits into ≥3 parts on ":" (split(":", 2));
     * the type is the single segment between the first two colons. Typed
-    * access via [[tagDouble]]/[[tagIntArray]] keeps the reference's
-    * drop-on-parse-fail semantics through null-on-failure casts.
+    * access via [[tagDouble]] keeps the reference's drop-on-parse-fail
+    * semantics through null-on-failure casts.
     */
   def tagMap(tagFields: Column): Column =
     graft.functions.GfaFunctions.gfa_tag_map(coalesce(tagFields, array()))
 
+  private def tagTyp(v: Column): Column = substring_index(v, ":", 1)
+
   /** Everything after the first ':' — the non-regex twin of
     * regexp_replace(v, "^[^:]*:", "") (callers guarantee a colon exists).
     */
-  private def afterFirstColon(v: Column): Column =
+  private def tagVal(v: Column): Column =
     v.substr(locate(":", v) + 1, length(v))
-
-  private def tagTyp(v: Column): Column = substring_index(v, ":", 1)
-  private def tagVal(v: Column): Column = afterFirstColon(v)
 
   /** `i`/`f` tag → double; other types or unparseable → null
     * (P9 weight extraction; builders.py:205-209). `i` parses through the
@@ -105,26 +88,6 @@ object GfaParse {
     val v = element_at(tags, tag)
     when(tagTyp(v) === "i", tagVal(v).try_cast("bigint").cast("double"))
       .when(tagTyp(v) === "f", tagVal(v).try_cast("double"))
-  }
-
-  /** `B` tag → int array iff every non-empty comma-separated element
-    * (including the subtype prefix) parses as int, else null — callers
-    * fall back to [[tagStringArray]], matching the reference's
-    * try-ints-else-string-list semantics (parser.py:197-201, verified
-    * against the reference: `ZZ:B:c,1,2,3` → string list).
-    */
-  def tagIntArray(tags: Column, tag: String): Column = {
-    val v = element_at(tags, tag)
-    val elems = filter(split(tagVal(v), ","), s => s =!= "")
-    when(tagTyp(v) === "B" &&
-           size(filter(elems, s => s.try_cast("int").isNull)) === 0,
-         transform(elems, s => s.try_cast("int")))
-  }
-
-  /** `B` tag raw element list (the reference's fallback representation). */
-  def tagStringArray(tags: Column, tag: String): Column = {
-    val v = element_at(tags, tag)
-    when(tagTyp(v) === "B", split(tagVal(v), ","))
   }
 
   // -------------------------------------------------------------- records

@@ -177,12 +177,4 @@ object SplitAlignment {
     Result(nodes, rewired.unionByName(chain).unionByName(rewiredL),
            rejectedE, rejectedL)
   }
-
-  /** Blowup guard (R-guard; builders.py:379-380): ratio of sub-nodes to
-    * original segments; callers warn above 10×.
-    */
-  def blowupRatio(lines: DataFrame, result: Result): Double = {
-    val nSegs = GfaParse.segments(lines).count()
-    if (nSegs == 0) 0.0 else result.nodes.count().toDouble / nSegs
-  }
 }

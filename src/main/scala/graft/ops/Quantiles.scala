@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reply-latency distribution — the north rule's "session-window query
-  * latency p95" surface as a first-class operator: per-tool exact and
-  * approximate percentiles of the assistant reply gap (the numeric-tag
+  * latency p95" surface as a first-class operator: per-tool exact
+  * percentiles of the assistant reply gap (the numeric-tag
   * weight the reference extracts per Link, builders.py:205-209, reduced
   * to order statistics instead of min/mean as in analysis.py:119-141).
   *
@@ -30,8 +30,7 @@ object Quantiles {
   /** Exact per-tool p50/p95/p99/max of the assistant reply gap. One
     * turn-order sort shuffle + one group-by; EXACT `percentile` holds the
     * per-group value multiset on the reducer — right for dimension-sized
-    * groups (tools), see [[replyLatencyApprox]] for the unbounded-
-    * cardinality scale path.
+    * groups (tools).
     */
   def replyLatency(turns: DataFrame): DataFrame =
     gaps(turns).groupBy("tool").agg(
@@ -56,19 +55,4 @@ object Quantiles {
         percentile(col("gap_us"), lit(0.95)).as("p95_us"),
         percentile(col("gap_us"), lit(0.99)).as("p99_us"),
         max(col("gap_us")).as("max_us"))
-
-  /** Sketch-based variant: `approx_percentile` (KLL-style, bounded
-    * memory, map-side combinable) — the 100-TB shape when group
-    * cardinality or per-group volume makes exact order statistics
-    * unreasonable. `accuracy` trades sketch size for rank error
-    * (1/accuracy relative rank); QuantilesSpec pins the sketch against
-    * the exact operator on the driver corpus.
-    */
-  def replyLatencyApprox(turns: DataFrame, accuracy: Int = 10000): DataFrame =
-    gaps(turns).groupBy("tool").agg(
-      count(lit(1)).as("n"),
-      approx_percentile(col("gap_us"), lit(0.5), lit(accuracy)).as("p50_us"),
-      approx_percentile(col("gap_us"), lit(0.95), lit(accuracy)).as("p95_us"),
-      approx_percentile(col("gap_us"), lit(0.99), lit(accuracy)).as("p99_us"),
-      max(col("gap_us")).as("max_us"))
 }

@@ -768,7 +768,7 @@ object StreamQueries {
         MaterializedView.start(src, s"$root/view", s"$root/ckpt")
       }
     }
-    s.read.parquet(s"$root/view")
+    MaterializedView.readView(s, s"$root/view")
       .select(col("conv_id"), col("n_turns"), col("n_tool_turns"), ntz("last_ts"))
   }
 

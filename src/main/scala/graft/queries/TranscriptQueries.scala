@@ -138,9 +138,7 @@ object TranscriptQueries {
     // Reply-latency order statistics: the north
     // rule's latency p95 as a first-class exact query — integer-µs gaps,
     // interpolated percentiles bit-identical across engines (both compute
-    // lo + (hi−lo)·frac at p·(n−1)). [[graft.ops.Quantiles]]; the
-    // bounded-memory approx_percentile scale path is pinned against this
-    // exact operator in QuantilesSpec.
+    // lo + (hi−lo)·frac at p·(n−1)). [[graft.ops.Quantiles]].
     QueryDef("q_latency_quantiles",
       (s, dir) => graft.ops.Quantiles.replyLatency(T(s, dir)),
       tsql(""", gaps AS (

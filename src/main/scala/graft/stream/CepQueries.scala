@@ -30,29 +30,11 @@ object CepQueries {
       .select(col("conv_id"), col("n_turns"), col("start_ts"), col("end_ts"),
               col("n_user"), col("n_tool"))
 
-  /** T4 — tumbling/sliding per-tool turn-rate (CEP query #2; the
-    * event-time form of the 500k-line progress cadence,
-    * builders.py:257-258). `slide` = None → tumbling.
-    */
-  def turnRate(turns: DataFrame, watermark: String = "10 minutes",
-               width: String = "1 hour", slide: Option[String] = None)
-      : DataFrame = {
-    val win = slide.map(s => window(col("ts"), width, s))
-      .getOrElse(window(col("ts"), width))
-    turns
-      .withWatermark("ts", watermark)
-      .groupBy(win.as("w"), col("tool"))
-      .agg(count(lit(1)).as("n_turns"),
-           approx_count_distinct("conv_id").as("n_convs_approx"))
-      .select(col("w.start").as("window_start"), col("tool"),
-              col("n_turns"), col("n_convs_approx"))
-  }
-
-  /** T4's exact-distinct form: per-window/tool turn counts with EXACT
+  /** T4 — tumbling per-tool turn-rate (CEP query #2; the event-time form
+    * of the 500k-line progress cadence, builders.py:257-258) with EXACT
     * conversation counts on the streaming path. A streaming aggregation
-    * cannot use `countDistinct`, which is why [[turnRate]] reports an HLL
-    * approximation; this variant CHAINS two stateful window aggregations
-    * (Spark ≥ 3.4 multiple-stateful-operator support) instead: the first
+    * cannot use `countDistinct`, so this CHAINS two stateful window
+    * aggregations (Spark ≥ 3.4 multiple-stateful-operator support): the first
     * collapses (window, tool, conv_id) — its state is the set of active
     * (conv, tool) pairs per open window, watermark-bounded — and the
     * second re-windows on `window_time` (the finalized window's event

@@ -95,12 +95,6 @@ object Dedup {
         count(lit(1)).over(Window.partitionBy(bandCols.map(col): _*)))
       .where(col("bsz") <= maxBucket).drop("bsz")
 
-  private def oversize(banded: DataFrame, bandCols: Seq[String],
-                       maxBucket: Int): DataFrame =
-    banded.groupBy(bandCols.map(col): _*)
-      .agg(count(lit(1)).as("n_members"))
-      .where(col("n_members") > maxBucket)
-
   /** The distinct-shingle-hash table (id, sh: array<bigint>) — the
     * materialization point of the MinHash pipeline: write this (and
     * [[minhashBands]]) to parquet once per corpus snapshot, and the whole
@@ -175,9 +169,10 @@ object Dedup {
                              textCol: String = "text", shingleK: Int = 5,
                              numHashes: Int = 32, bands: Int = 8,
                              maxBucket: Int = DefaultMaxBucket): DataFrame =
-    oversize(minhashBands(shingleTable(docs, idCol, textCol, shingleK),
-                          numHashes, bands),
-             Seq("band", "band_hash"), maxBucket)
+    minhashBands(shingleTable(docs, idCol, textCol, shingleK), numHashes, bands)
+      .groupBy("band", "band_hash")
+      .agg(count(lit(1)).as("n_members"))
+      .where(col("n_members") > maxBucket)
 
   /** Shingle-set Jaccard for candidate pairs — the verification step after
     * LSH (computed on the hashed shingle sets of [[shingleTable]]).
@@ -281,10 +276,8 @@ object Dedup {
   }
 
   /** Chunk explode of a hyperplane-signature table (id, sig) — the one
-    * banding step of the vector-LSH family: [[embeddingNearDupsFromSigs]],
-    * [[embeddingOversizeBuckets]] and [[graft.sim.Knn.lshTopKFromSigs]]
-    * all band through it, so the dropped-bucket side output always
-    * corresponds to the buckets the candidate join actually sees.
+    * banding step of the vector-LSH family: [[embeddingNearDupsFromSigs]]
+    * and [[graft.sim.Knn.lshTopKFromSigs]] both band through it.
     */
   private[graft] def chunksOfSigs(sigs: DataFrame, bits: Int,
                                   bandBits: Int): DataFrame = {
@@ -405,17 +398,6 @@ object Dedup {
                        maxCluster: Int = DefaultMaxBucket): DataFrame =
     assign.groupBy("cluster_id").agg(count(lit(1)).as("n"))
       .where(col("n") > maxCluster)
-
-  /** Counted side output: over-cap embedding LSH buckets (see
-    * [[minhashOversizeBuckets]]).
-    */
-  def embeddingOversizeBuckets(emb: DataFrame, idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               bits: Int = 32, bandBits: Int = 8,
-                               maxBucket: Int = DefaultMaxBucket): DataFrame =
-    oversize(chunksOfSigs(graft.sim.Knn.lshSignatures(emb, idCol, vecCol, bits),
-                          bits, bandBits),
-             Seq("chunk", "chunk_val"), maxBucket)
 
   /** 64-bit SimHash signature per doc: bit j is the sign of
     * Σ_tokens (bit_j(xxhash64(token)) ? +1 : -1). Static per-bit aggregate

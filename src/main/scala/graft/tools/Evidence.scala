@@ -1,11 +1,12 @@
 package graft.tools
 
-/** One-command evidence regeneration (BENCH.md's deep-kernel and
-  * head-to-head tables): runs [[DeepBench]] (frontier vs full-state
-  * filter A/B), the graft side of the head-to-head ([[HeadToHead]]) on a
-  * reduced-size input, and the reference library itself (python3,
-  * in-process import of /root/reference — the same protocol BENCH.md
-  * records) on the IDENTICAL file. Emits one JSON line per experiment (an
+/** One-command evidence regeneration (the deep-kernel and head-to-head
+  * tables of `git show 1978c16:BENCH.md`): runs [[DeepBench]] (frontier
+  * vs full-state filter A/B), the graft side of the head-to-head
+  * ([[HeadToHead]]) on a reduced-size input, and the reference library
+  * itself (python3, in-process import of the reference checkout — the
+  * same protocol those tables record) on the IDENTICAL file. Emits one
+  * JSON line per experiment (an
   * `{"metric":…,"error":…}` line for an experiment that fails) to
   * stdout and appends them to `GRAFT_EVIDENCE_OUT` (default
   * EVIDENCE.json), so the committed evidence regenerates with:
@@ -13,7 +14,7 @@ package graft.tools
   *   sbt -batch "runMain graft.tools.Evidence"
   *
   * Knobs: GRAFT_H2H_N (head-to-head segments, default 250000 — the full
-  * BENCH.md protocol used 1M; reduced keeps the whole run ~5 min),
+  * recorded protocol used 1M; reduced keeps the whole run ~5 min),
   * GRAFT_LAYERS/GRAFT_WIDTH (DeepBench shape), GRAFT_SKIP=deep|h2h|ref
   * (comma-set) to skip parts.
   */

@@ -7,7 +7,8 @@ import graft.gfa.{GfaAnalysis, GfaGraph}
 /** Single-node throughput head-to-head against the reference on the SAME
   * synthetic GFA file (default /tmp/bench_big.gfa — 1M segments, 1.5M
   * links, 12 × 1000-segment paths; generator + reference timings recorded
-  * in BENCH.md). Runs the same two entry points the reference CLI exposes:
+  * in `git show 1978c16:BENCH.md`). Runs the same two entry points the
+  * reference CLI exposes:
   * compute_stats and genome_distance_matrix(min), default (directed)
   * options = the reference's DiGraph defaults.
   */

@@ -13,7 +13,7 @@ class Drb1RealismSpec extends SparkSuite {
 
   private val path = "/root/reference/tests/data/DRB1-3123_unsorted.gfa"
 
-  private lazy val g = Gfa.read(spark, path)
+  private lazy val lines = GfaGraph.readLines(spark, path)
 
   test("DRB1 compute_stats matches the reference run exactly") {
     implicit val s = spark
@@ -28,7 +28,7 @@ class Drb1RealismSpec extends SparkSuite {
   }
 
   test("DRB1 distance matrix: 12 paths, all pairwise distances 0") {
-    val m = g.distanceMatrix("min").collect()
+    val m = GfaAnalysis.genomeDistanceMatrix(lines, "min").collect()
     assert(m.length == 144)
     assert(m.forall(_.getLong(2) == 0L))
   }
@@ -38,7 +38,7 @@ class Drb1RealismSpec extends SparkSuite {
     // realism check: goldens from running the reference's
     // genome_distance_matrix(method="mean") on this fixture (defaults:
     // directed graph, unweighted)
-    val m = g.distanceMatrix("mean").collect()
+    val m = GfaAnalysis.genomeDistanceMatrix(lines, "mean").collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getDouble(2))).toMap
     assert(m.size == 144)
     val golden = Seq(
@@ -59,7 +59,7 @@ class Drb1RealismSpec extends SparkSuite {
   }
 
   test("DRB1 node index is dense over 3214 first-seen nodes") {
-    val idx = g.nodeIndex()
+    val idx = GfaGraph.nodeIndex(lines)
     assert(idx.count() == 3214L)
     val mx = idx.agg(org.apache.spark.sql.functions.max("idx")).head().getLong(0)
     assert(mx == 3213L)

@@ -118,8 +118,8 @@ class ExportSpec extends SparkSuite {
       new java.io.FileOutputStream(gzPath))
     out.write("S\ts1\tACGT\nS\ts2\tTTTT\nL\ts1\t+\ts2\t-\t0M\n".getBytes)
     out.close()
-    val g = Gfa.read(spark, gzPath)
-    assert(g.segments.count() == 2)
-    assert(g.links.count() == 1)
+    val gz = GfaGraph.readLines(spark, gzPath)
+    assert(GfaParse.segments(gz).count() == 2)
+    assert(GfaParse.links(gz).count() == 1)
   }
 }

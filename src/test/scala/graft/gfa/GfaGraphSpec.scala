@@ -26,6 +26,11 @@ class GfaGraphSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(e == Set(("s1:+", "s2:-"), ("s2:+", "s1:-")))
     assert(GfaGraph.nodes(lines, opts).count() == 4)
+    // --keep-directed-bidir: oriented nodes, no reverse-complement twin
+    val kept = GfaGraph.edges(lines,
+        GfaOptions(bidirected = true, keepDirectedBidir = true))
+      .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(kept.toSeq == Seq(("s1:+", "s2:-")))
   }
 
   test("first-seen node index (builders.py:190-198) honors file order") {

@@ -54,14 +54,14 @@ class GfaParseSpec extends SparkSuite {
       GfaParse.tagDouble(col("tags"), "RC").as("rc"),
       GfaParse.tagDouble(col("tags"), "XX").as("xx"),
       GfaParse.tagDouble(col("tags"), "YY").as("yy"),
-      GfaParse.tagIntArray(col("tags"), "ZZ").as("zzInt"),
-      GfaParse.tagStringArray(col("tags"), "ZZ").as("zzStr"),
+      GfaParse.tagDouble(col("tags"), "ZZ").as("zz"),
+      element_at(col("tags"), "ZZ").as("zzRaw"),
       element_at(col("tags"), "BAD").as("bad")).head()
     assert(t.getDouble(0) == 5.0)
     assert(t.getDouble(1) == 1.5)
     assert(t.isNullAt(2))                       // Z tag is not numeric
-    assert(t.isNullAt(3))                       // 'c' breaks int parse
-    assert(t.getSeq[String](4) == Seq("c", "1", "2", "3")) // golden fallback
+    assert(t.isNullAt(3))                       // B tag is not numeric
+    assert(t.getString(4) == "B:c,1,2,3")       // kept raw as TYPE:VALUE
     assert(t.isNullAt(5))                       // <2 colons → not a tag
   }
 

@@ -48,18 +48,6 @@ class StreamingSpec extends SparkSuite {
     (streamed, spark.createDataset(data).toDF())
   }
 
-  test("T4 turn-rate: streaming append == batch (excluding sentinel rows)") {
-    val (streamed, batch) = runToCompletion(df =>
-      CepQueries.turnRate(df, watermark = "1 minute", width = "1 hour"))
-    val s = streamed.where(!col("window_start").isNull)
-      .where(col("n_turns") > 0)
-      .where(col("window_start") <= new Timestamp(maxTs))
-      .select("window_start", "tool", "n_turns")
-    val b = CepQueries.turnRate(batch, "1 minute", "1 hour")
-      .select("window_start", "tool", "n_turns")
-    assert(s.exceptAll(b).isEmpty && b.exceptAll(s).isEmpty)
-  }
-
   test("T4 exact-distinct rate: chained streaming window aggs == batch countDistinct") {
     // the chained two-level aggregation must reproduce EXACT
     // COUNT(DISTINCT conv_id) on the streaming path — the thing the
@@ -290,8 +278,8 @@ class StreamingSpec extends SparkSuite {
     val metrics = new Metrics
     spark.streams.addListener(metrics)
     try {
-      val agg = CepQueries.turnRate(ms.toDF(), watermark = "10 minutes",
-                                    width = "5 minutes")
+      val agg = CepQueries.turnRateExactDistinct(ms.toDF(),
+        watermark = "10 minutes", width = "5 minutes")
       val query = agg.writeStream.format("memory")
         .queryName("late_out").outputMode("append").start()
       def at(min: Long, c: String = "L") =

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB oracle compare for graft Verify output.
 
-Usage: python3 /tmp/compare.py <sfdir> <outdir>
+Usage: python3 scripts/compare_oracle.py <sfdir> <outdir>
 Registers every parquet in sfdir as a DuckDB view, runs each entry of
 <outdir>/oracle_sql.json, sorts columns by name and rows by all columns,
 and diffs against the Spark parquet dump in <outdir>/<query>/.

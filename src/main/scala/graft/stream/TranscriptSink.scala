@@ -9,21 +9,31 @@ import org.apache.spark.sql.functions._
   * (`days(ts), bucket(conv_id)`; no iceberg jar ships here, see SURVEY §7).
   *
   * GFA analog: the insert-once `node2idx` dict (builders.py:190-198) —
-  * a replayed record must not create a second node. Under foreachBatch
-  * replay (restart from checkpoint), re-upserting the same micro-batch
-  * rewrites the same partitions with the same content: idempotent.
+  * a replayed record must not create a second node. The MERGE resolves
+  * as "existing keys win", which never changes a stored row, so every
+  * micro-batch is one append of its rows whose keys the table lacks.
+  * A replayed batch (restart from checkpoint) appends nothing, and an
+  * append that committed only some of its files heals on replay, because
+  * the keys already present are skipped.
   *
-  * Scale shape: each micro-batch touches only the day partitions present
-  * in the batch (dynamic partition overwrite), reads back only those
-  * partitions for the anti-join, and the merge key join is on the same
-  * (conv_id, turn_idx) the table is laid out by.
+  * Layout and readers:
+  *  - a day partition holds one file set per batch that touched it; no
+  *    step rewrites or compacts a day;
+  *  - no reader relies on one sorted run per day: the readers (the
+  *    perfbench `transcript_batch` operators, `tools.Scaling`'s count)
+  *    group, window or count, and read every file of the day;
+  *  - no query reads the table while the sink writes to it.
+  * The anti-join reads only the existing keys of the days the batch
+  * touches: a key's `ts`, hence its day, is part of the record and does
+  * not change between deliveries.
   */
 object TranscriptSink {
 
   val mergeKeys = Seq("conv_id", "turn_idx")
 
   /** Upsert one micro-batch: new keys are inserted, existing keys win
-    * (insert-once, matching node2idx).
+    * (insert-once, matching node2idx). Rows with a null `ts` have no day
+    * partition and are dropped, so the table and the lineage agree.
     */
   def upsertBatch(spark: SparkSession, tablePath: String,
                   batch: DataFrame, batchId: Long,
@@ -34,46 +44,29 @@ object TranscriptSink {
     // a file-count explosion that degrades every later read. Clustered,
     // each day lands in a few contiguous tasks: O(tasks) files per batch.
     val withDay = batch
+      .where(col("ts").isNotNull)
       .dropDuplicates(mergeKeys)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .repartitionByRange(col("day"), col("conv_id"))
     val days = withDay.select("day").distinct().collect().map(_.getString(0))
     if (days.isEmpty) return
 
-    // MERGE-shaped write (what Iceberg MERGE INTO does at the file level):
-    // day partitions with no existing data take the cheap append path; only
-    // partitions that already hold rows are read back, anti-joined, and
-    // rewritten. For an in-order stream, steady state is pure append with a
-    // one-partition merge at each day boundary.
-    val existingDays = listDays(spark, tablePath).toSet
-    val (mergeDays, appendDays) = days.partition(existingDays.contains)
-
-    if (appendDays.nonEmpty)
-      withDay.where(col("day").isin(appendDays: _*))
-        .sortWithinPartitions("conv_id", "turn_idx") // stable order invariant
-        .write.mode(SaveMode.Append).partitionBy("day").parquet(tablePath)
-
-    if (mergeDays.nonEmpty) {
-      val incoming = withDay.where(col("day").isin(mergeDays: _*))
-      val existing = spark.read.parquet(tablePath)
-        .where(col("day").isin(mergeDays: _*))
-      val fresh = incoming.join(
-        existing.select(mergeKeys.map(col): _*), mergeKeys, "left_anti")
-      // localCheckpoint materializes the merge BEFORE the overwrite: it
-      // truncates the plan so the write job no longer references the table
-      // path it is about to rewrite (read-overwrite-same-path hazard).
-      val merged = existing.select(incoming.columns.map(col): _*)
-        .unionByName(fresh).localCheckpoint(true)
-      // dynamic overwrite per write, not via the session conf: only the
-      // merged day partitions are replaced, and concurrent writers on the
-      // same session keep their own overwrite mode
-      merged
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(tablePath)
-    }
+    // MERGE-shaped write (what Iceberg MERGE INTO does when matched rows
+    // are kept): anti-join against the keys of the days the table already
+    // holds, then append. A batch of new days skips the anti-join. A
+    // broadcast anti-join keeps the range clustering; a sort-merge one
+    // (large existing days) re-hashes by key, up to one file per task per
+    // touched day.
+    val present = listDays(spark, tablePath).toSet
+    val touched = days.filter(present.contains)
+    val fresh =
+      if (touched.isEmpty) withDay
+      else withDay.join(spark.read.parquet(tablePath)
+        .where(col("day").isin(touched: _*))
+        .select(mergeKeys.map(col): _*), mergeKeys, "left_anti")
+    fresh
+      .sortWithinPartitions("conv_id", "turn_idx") // each file sorted by key
+      .write.mode(SaveMode.Append).partitionBy("day").parquet(tablePath)
 
     lineagePath.foreach(Lineage.record(_, batchId, withDay))
   }

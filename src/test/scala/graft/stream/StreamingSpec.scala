@@ -254,14 +254,21 @@ class StreamingSpec extends SparkSuite {
       .collect().map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("rows")).toMap
     assert(perBatch(0L) == b1.count() && perBatch(1L) == b2.count())
 
-    // a two-day batch where only day 0 merges (day 1 is new): the merge
-    // overwrites day 0 alone, so the appended day 1 and the untouched
-    // day 2 survive, and the session's overwrite mode is left as found
+    // a two-day batch where day 0 is already in the table and day 1 is
+    // new: the batch anti-joins against day 0's keys and appends, so the
+    // stored ("a", 0) is kept, ("a", 1) and day 1 are added, the untouched
+    // day 2 survives, the session's overwrite mode is left as found, and
+    // the day-0 files batch 0 wrote are not rewritten
     def turn(c: String, i: Int, day: Int) = Turn(c, i, "user", "x", None,
       new Timestamp(1700000000000L + day * 86400000L))
     val table2 = s"$dir/table2"
     TranscriptSink.upsertBatch(spark, table2,
       Seq(turn("a", 0, 0), turn("b", 0, 2)).toDF(), 0L)
+    val day0 = new java.io.File(s"$table2/day=2023-11-14")
+    def parquetFiles(d: java.io.File) = d.listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toSet
+    val day0Files = parquetFiles(day0)
+    assert(day0Files.nonEmpty)
     val modeKey = "spark.sql.sources.partitionOverwriteMode"
     val mode = spark.conf.getOption(modeKey)
     TranscriptSink.upsertBatch(spark, table2,
@@ -270,6 +277,22 @@ class StreamingSpec extends SparkSuite {
     val keys = spark.read.parquet(table2).select("conv_id", "turn_idx")
       .as[(String, Int)].collect().toSet
     assert(keys == Set(("a", 0), ("a", 1), ("b", 0), ("c", 0)))
+    assert(day0Files.subsetOf(parquetFiles(day0)))
+  }
+
+  test("T9 sink: null-ts rows are dropped, table and lineage agree") {
+    val dir = java.nio.file.Files.createTempDirectory("sink_null_ts").toString
+    val (table, lineage) = (s"$dir/table", s"$dir/lineage")
+    val rows = Seq(Turn("a", 0, "user", "x", None, new Timestamp(1700000000000L)),
+                   Turn("a", 1, "user", "y", None, null)).toDF()
+    TranscriptSink.upsertBatch(spark, table, rows, 0L, Some(lineage))
+    TranscriptSink.upsertBatch(spark, table, rows, 0L, Some(lineage))
+    val sunk = spark.read.parquet(table)
+    assert(sunk.select("conv_id", "turn_idx").as[(String, Int)].collect().toSeq
+      == Seq(("a", 0)))
+    assert(new java.io.File(table).list().filter(_.startsWith("day=")).toSeq
+      == Seq("day=2023-11-14"))
+    assert(Lineage.read(spark, lineage).agg(sum("row_count")).head().getLong(0) == 1L)
   }
 
   test("T2 watermark: late rows are dropped and counted") {

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Generic distributed graph kernels over edge DataFrames (src:string,
@@ -27,7 +28,7 @@ object Graph {
     * rebuilds a default-stats leaf over the materialized RDD.
     */
   private def ckpt(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.freshLeaf(df.localCheckpoint(true))
+    Bridge.freshLeaf(df.localCheckpoint(true))
 
   /** Rows-per-shuffle-partition target for the iterative kernels: their
     * per-round relations (frontier / label tables) are usually far
@@ -36,7 +37,7 @@ object Graph {
     */
   val LoopRowsPerPartition: Long = 65536L
 
-  /** Shared rows→partitions derivation of [[loopScoped]]/[[loopCompact]]
+  /** Shared rows→partitions derivation of [[inLoopSession]]/[[loopCompact]]
     * — one definition so the loop's shuffle parallelism can never
     * disagree with the compacted cached relation's layout.
     */
@@ -51,26 +52,23 @@ object Graph {
   /** Run an iterative kernel's driver loop with its per-round shuffle
     * parallelism derived from the MEASURED graph size instead of the
     * session default (guide §2: scale-adaptive partitioning, not a
-    * constant). In the tiny regime AQE is also disabled for the scope:
+    * constant). In the tiny regime AQE is also disabled for the loop:
     * each AQE query-stage materialization is a separate job, and a
     * 3-round loop over a dimension-sized graph was measured at ~39 jobs —
     * per-round fixed overhead, not compute. Graphs big enough to need ≥
     * the session parallelism run untouched (AQE coalescing/skew handling
-    * stay in force on the 100-TB path).
+    * stay in force on the 100-TB path). Otherwise `body` gets a
+    * [[Bridge.child]] carrying the override and must [[Bridge.rebind]]
+    * every relation the loop reads into it; the result is rebound to the
+    * caller, so plans built on it keep the caller's conf.
     */
-  private def loopScoped[A](spark: SparkSession, rows: Long)(body: => A): A = {
+  private def inLoopSession(spark: SparkSession, rows: Long)(
+      body: SparkSession => DataFrame): DataFrame = {
     val (target, default) = loopTarget(spark, rows)
-    if (target >= default) body
-    else {
-      val prevP = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", target.toString)
-      if (target <= 8) spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try body finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevP)
-        spark.conf.set("spark.sql.adaptive.enabled", prevA)
-      }
-    }
+    val ls = if (target >= default) spark
+      else Bridge.child(spark, Seq("spark.sql.shuffle.partitions" -> target.toString) ++
+        (if (target <= 8) Seq("spark.sql.adaptive.enabled" -> "false") else Nil): _*)
+    Bridge.rebind(body(ls), spark)
   }
 
   /** Narrow a small ALREADY-MATERIALIZED cached relation to the loop's
@@ -156,9 +154,9 @@ object Graph {
       // per-round broadcast of a ~1M-row table was measured to cost more
       // (driver collect + hashmap build each round) than it saves, hence
       // the cap.
-      val r = loopScoped(spark, loopRows) {
-        ccLoop(loopCompact(spark, undStr, loopRows), allStr,
-               bcastLabels = true, maxIter)
+      val r = inLoopSession(spark, loopRows) { ls =>
+        ccLoop(loopCompact(spark, Bridge.rebind(undStr, ls), loopRows),
+               Bridge.rebind(allStr, ls), bcastLabels = true, maxIter)
       }
       undStr.unpersist(blocking = false)
       r
@@ -189,14 +187,15 @@ object Graph {
         .persist(StorageLevel.MEMORY_AND_DISK)
       und.count()
       undStr.unpersist(blocking = false)
-      try loopScoped(spark, loopRows) {
-        val labels = ccLoop(loopCompact(spark, und, loopRows),
-                            idMap.select(col("id").as("node")),
+      try inLoopSession(spark, loopRows) { ls =>
+        val ids = Bridge.rebind(idMap, ls)
+        val labels = ccLoop(loopCompact(spark, Bridge.rebind(und, ls), loopRows),
+                            ids.select(col("id").as("node")),
                             bcastLabels = false, maxIter)
         // map internal ids back to node strings and re-derive each
         // component's representative as its minimum node string
         val out = labels
-          .join(idMap.select(col("id"), col("node").as("node_str")),
+          .join(ids.select(col("id"), col("node").as("node_str")),
                 labels("node") === col("id"))
           .select(col("node_str").as("node"), col("label").as("ilabel"))
         val rep = out.groupBy("ilabel").agg(min("node").as("label"))
@@ -305,11 +304,13 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nAdj = adjFull.count()
     val spark = edges.sparkSession
-    loopScoped(spark, nAdj) {
-    val adj = loopCompact(spark, adjFull, nAdj)
-    var dist = seeds.select(col("tag"), col("node"), lit(0L).as("dist"))
+    inLoopSession(spark, nAdj) { ls =>
+    val adj = loopCompact(spark, Bridge.rebind(adjFull, ls), nAdj)
+    var dist = Bridge.rebind(seeds, ls)
+      .select(col("tag"), col("node"), lit(0L).as("dist"))
       .distinct().transform(ckpt)
-    def hitStop(frontierDf: DataFrame): Boolean = stopSet.exists(s =>
+    val stop = stopSet.map(Bridge.rebind(_, ls))
+    def hitStop(frontierDf: DataFrame): Boolean = stop.exists(s =>
       !frontierDf.join(s.select(col("node")), Seq("node"), "left_semi")
         .limit(1).isEmpty)
     var frontier = dist
@@ -453,8 +454,8 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nAdj = adjFull.count()
     val spark = edges.sparkSession
-    loopScoped(spark, nAdj) {
-    val adj = loopCompact(spark, adjFull, nAdj)
+    inLoopSession(spark, nAdj) { ls =>
+    val adj = loopCompact(spark, Bridge.rebind(adjFull, ls), nAdj)
     // INCREMENTAL state: `dist` is a lazy union of checkpointed
     // improvement deltas — later deltas strictly beat earlier entries for
     // the same (tag, node), so the current best is min-over-union and the
@@ -462,7 +463,8 @@ object Graph {
     // periodic compactions that bound plan depth). The old formulation
     // full-outer-joined and re-checkpointed the ENTIRE dist table every
     // round: O(rounds × state) shuffle+checkpoint I/O.
-    var dist = seeds.select(col("tag"), col("node"), lit(0.0).as("dist"))
+    var dist = Bridge.rebind(seeds, ls)
+      .select(col("tag"), col("node"), lit(0.0).as("dist"))
       .distinct().transform(ckpt)
     def bestDist(): DataFrame =
       dist.groupBy("tag", "node").agg(min("dist").as("dist"))
@@ -474,7 +476,8 @@ object Graph {
     // extension costs at least the frontier minimum); done when no tag
     // still has frontier work that could beat its stop-set best. With
     // stopSet, ONLY stop-set rows are guaranteed final in the result.
-    def settled(): Boolean = stopSet.exists { ss =>
+    val stop = stopSet.map(Bridge.rebind(_, ls))
+    def settled(): Boolean = stop.exists { ss =>
       val stopMin = dist
         .join(ss.select(col("node")), Seq("node"), "left_semi")
         .groupBy("tag").agg(min("dist").as("sm"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ops.{HeavyHitters, Rates, Sessions}
 import graft.schema.Turn
@@ -43,10 +44,9 @@ object StreamQueries {
     // (session-window merge) state on RocksDB + changelog checkpointing,
     // under the identical islands oracle.
     QueryDef("q_stream_sessions_rocksdb",
-      (s, dir) => StateStores.withRocksDb(s) {
-        turnStream(s, streamFeed(s, dir), "q_stream_sessions_rocksdb", nSentinels = 1) {
-          src => CepQueries.sessionStats(src, watermark = "10 minutes", gap = "30 minutes")
-        }
+      (s, dir) => turnStream(s, streamFeed(s, dir), "q_stream_sessions_rocksdb", nSentinels = 1,
+                             conf = StateStores.RocksDbConf) {
+        src => CepQueries.sessionStats(src, watermark = "10 minutes", gap = "30 minutes")
       }.select(col("conv_id"), col("n_turns"), ntz("start_ts"), ntz("end_ts")),
       // identical islands oracle — the RocksDB state backend must be
       // invisible in the result
@@ -196,16 +196,14 @@ object StreamQueries {
     // RocksDB state-store provider — the arbitrary-stateful successor API,
     // hash-checked against the identical islands oracle so the two state
     // backends/APIs must agree row-for-row ([[graft.stream.Patterns
-    // .attachTws]], [[graft.stream.StateStores.withRocksDb]]).
+    // .attachTws]], started with [[graft.stream.StateStores.RocksDbConf]]).
     QueryDef("q_stream_runs_tws",
-      (s, dir) => StateStores.withRocksDb(s) {
-        turnStream(s, streamFeed(s, dir), "q_stream_runs_tws", nSentinels = 2,
-                   gapMs = TwoWeeksMs) { src =>
-          import s.implicits._
-          Patterns.attachTws(src.withWatermark("ts", "10 minutes").as[Turn]
-                               .filter(_.tool.isDefined),
-                             minLen = 2, idleTimeout = "48 hours").toDF()
-        }
+      (s, dir) => turnStream(s, streamFeed(s, dir), "q_stream_runs_tws", nSentinels = 2,
+                             gapMs = TwoWeeksMs, conf = StateStores.RocksDbConf) { src =>
+        import s.implicits._
+        Patterns.attachTws(src.withWatermark("ts", "10 minutes").as[Turn]
+                             .filter(_.tool.isDefined),
+                           minLen = 2, idleTimeout = "48 hours").toDF()
       },
       // identical oracle to q_stream_runs — the transformWithState/RocksDB
       // path must agree with the flatMapGroupsWithState/heap path exactly
@@ -710,29 +708,34 @@ object StreamQueries {
       .select(col("conv_id"), col("n_turns"), col("n_edges"),
               col("min_idx"), col("max_idx"), col("contiguous"))
 
-  /** State partitions auto-sized from the fed volume
-    * ([[StatePartitions]]); minParts = 2 keeps cross-partition state
-    * handling exercised at negligible commit cost.
+  /** The child session a feed's query starts in: state partitions
+    * auto-sized from the fed volume ([[StatePartitions]]; minParts = 2
+    * keeps cross-partition state handling exercised at negligible commit
+    * cost), plus `conf` (e.g. [[StateStores.RocksDbConf]]).
     */
-  private def feedParts(rows: Seq[Turn]): Int =
-    StatePartitions.forVolume(rows.length, minParts = 2)
+  private def stateSession(s: SparkSession, rows: Seq[Turn],
+                           conf: Seq[(String, String)] = Nil): SparkSession =
+    Bridge.child(s, ("spark.sql.shuffle.partitions" ->
+      StatePartitions.forVolume(rows.length, minParts = 2).toString) +: conf: _*)
 
   /** `build` over the turn feed plus `nSentinels` sentinel batches
     * ([[Harness.sentinels]]) into an append-mode memory sink; returns the
-    * sink table with the sentinels' own rows removed by `drop`.
+    * sink table with the sentinels' own rows removed by `drop`. The query
+    * runs in [[stateSession]], whose catalog holds the sink's view.
     */
   private def turnStream(s: SparkSession, rows: Seq[Turn], tag: String,
                          nSentinels: Int,
                          gapMs: Long = Harness.DefaultSentinelGapMs,
                          roles: Seq[String] = Seq("user"),
-                         drop: DataFrame => DataFrame = _.where(notSentinel))(
+                         drop: DataFrame => DataFrame = _.where(notSentinel),
+                         conf: Seq[(String, String)] = Nil)(
       build: DataFrame => DataFrame): DataFrame = {
     val name = s"${tag}_${System.nanoTime()}"
-    val parts = feedParts(rows)
-    Harness.run(s, rows, Harness.sentinels(rows, nSentinels, gapMs, roles)) { src =>
-      StatePartitions.scoped(s, parts)(Harness.toMemory(build(src), name))
+    val c = stateSession(s, rows, conf)
+    Harness.run(c, rows, Harness.sentinels(rows, nSentinels, gapMs, roles)) { src =>
+      Harness.toMemory(build(src), name)
     }
-    drop(s.table(name))
+    drop(Bridge.rebind(c.table(name), s))
   }
 
   /** [[turnStream]] killed after the first half and restarted from the
@@ -747,9 +750,9 @@ object StreamQueries {
                                 gapMs: Long = Harness.DefaultSentinelGapMs)(
       build: DataFrame => DataFrame): DataFrame = {
     val root = Harness.workDir(tag)
-    val parts = feedParts(rows)
-    Harness.run(s, rows, Harness.sentinels(rows, nSentinels, gapMs), restart = true) {
-      src => StatePartitions.scoped(s, parts)(Harness.toParquet(build(src), root))
+    Harness.run(stateSession(s, rows), rows,
+                Harness.sentinels(rows, nSentinels, gapMs), restart = true) {
+      src => Harness.toParquet(build(src), root)
     }
     s.read.parquet(s"$root/out").where(notSentinel)
   }
@@ -762,11 +765,8 @@ object StreamQueries {
                       restart: Boolean): DataFrame = {
     val rows = streamFeed(s, dir)
     val root = Harness.workDir(tag)
-    val parts = feedParts(rows)
-    Harness.run(s, rows, restart = restart) { src =>
-      StatePartitions.scoped(s, parts) {
-        MaterializedView.start(src, s"$root/view", s"$root/ckpt")
-      }
+    Harness.run(stateSession(s, rows), rows, restart = restart) { src =>
+      MaterializedView.start(src, s"$root/view", s"$root/ckpt")
     }
     MaterializedView.readView(s, s"$root/view")
       .select(col("conv_id"), col("n_turns"), col("n_tool_turns"), ntz("last_ts"))

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.VecFunctions.vec_dot
 
@@ -56,7 +57,9 @@ object Knn {
     * imperative twin of the typed TopKByScore Aggregator, whose per-row
     * encoder round-trip dominated the all-pairs stage) — a window over
     * the raw pair set would shuffle O(|q|·|corpus|) rows instead.
-    * Identical results to row_number over (key desc, nbr_id asc).
+    * Identical results to row_number over (key desc, nbr_id asc). The
+    * result is bound to a `Bridge.child` of `scored`'s session that
+    * carries the aggregate's fallback threshold.
     */
   private[graft] def topKExplode(scored: DataFrame, k: Int): DataFrame = {
     // ObjectHashAggregate abandons hash mode after
@@ -70,17 +73,14 @@ object Knn {
     // a per-task memory bound, not a local-mode tune (measured: −0.7 s on
     // the sf0.1 all-pairs stage).
     //
-    // The set is session-scoped (execution reads the conf after this
-    // builder returns, so it cannot be try/finally-restored) and is an
-    // intentional ENGINE default: the session's other object-hash
-    // aggregates carry conversation-/dimension-bounded buffers (CSR int
-    // arrays, per-conv collect_lists, capacity-bounded MG sketches —
-    // KB-scale each), so 4096 in-memory groups stay MB-scale per task;
-    // an engine adding a genuinely unbounded-buffer aggregate must
-    // revisit this bound.
-    scored.sparkSession.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-    scored.groupBy("query_id")
+    // The threshold is read when the aggregate is PLANNED, so the
+    // aggregate is built in a child session that carries it and the
+    // child-bound result is returned; the caller's session is never
+    // touched. A plan that joins this result as its RIGHT side plans in
+    // the left side's session, without the threshold (same rows).
+    val c = Bridge.child(scored.sparkSession,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096")
+    Bridge.rebind(scored, c).groupBy("query_id")
       .agg(graft.functions.TopKAgg.top_k_by_score(
         col("key"), col("nbr_id"), col("sim"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))

@@ -14,9 +14,10 @@ import graft.schema.Turn
   * halves (two micro-batches), any trailing sentinel batches, the
   * optional stop and restart between the halves, and
   * `processAllAvailable`/`stop`. The caller passes only `start`, which
-  * builds the query over the stream and starts it with its own sink,
-  * checkpoint and state-partition scope; the harness never looks at
-  * which query it serves. Callers read the result back from their sink.
+  * builds the query over the stream and starts it with its own sink and
+  * checkpoint; start-time conf (state partitions, provider) is that of
+  * the session passed in. The harness never looks at which query it
+  * serves. Callers read the result back from their sink.
   */
 object Harness {
 

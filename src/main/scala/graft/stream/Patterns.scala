@@ -151,7 +151,7 @@ object Patterns {
     * arbitrary-stateful-processing successor to flatMapGroupsWithState
     * (typed state variables, EXPLICIT event-time timers instead of the
     * one-per-key timeout). Requires the RocksDB state-store provider
-    * ([[StateStores.withRocksDb]]); output is row-identical to [[attach]]
+    * ([[StateStores.RocksDbConf]]); output is row-identical to [[attach]]
     * over the same input — q_stream_runs_tws hash-checks that under the
     * same oracle. Exactly one live timer per conversation: each batch
     * deletes the previous expiry before registering the advanced one, and

@@ -1,7 +1,5 @@
 package graft.stream
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming state-partition sizing (the q_stream_sessions hand-scoping,
   * generalized into a mechanism).
   *
@@ -13,9 +11,9 @@ import org.apache.spark.sql.SparkSession
   * over a kilobyte-scale driver feed was ~10 s of pure commit overhead;
   * conversely one partition under a multi-million-row trigger serializes
   * the state task. [[forVolume]] picks partitions so each holds about
-  * `targetRowsPerPartition` rows of a trigger; [[scoped]] applies the
-  * choice for exactly one query start and restores the session conf (batch
-  * queries in the same session keep their own parallelism).
+  * `targetRowsPerPartition` rows of a trigger. Callers start the query
+  * in a `Bridge.child` session carrying the choice, so batch queries in
+  * the caller's session keep their own parallelism.
   */
 object StatePartitions {
 
@@ -37,15 +35,5 @@ object StatePartitions {
     require(targetRowsPerPartition > 0 && minParts > 0 && maxParts >= minParts)
     val ideal = math.ceil(rowsPerTrigger.toDouble / targetRowsPerPartition)
     math.max(minParts, math.min(maxParts.toDouble, ideal)).toInt
-  }
-
-  /** Run `start` (which must START the streaming query — the conf is read
-    * at query start) with `spark.sql.shuffle.partitions` = n, restoring
-    * the previous value afterwards.
-    */
-  def scoped[A](s: SparkSession, n: Int)(start: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

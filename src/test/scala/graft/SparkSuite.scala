@@ -21,6 +21,16 @@ object SparkSuite {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
 
+  /** Whether `q`'s last progress reports state-store metrics of the
+    * RocksDB provider: with the default heap provider a query started in
+    * the wrong session passes a parity check just as well.
+    */
+  def onRocksDb(q: org.apache.spark.sql.streaming.StreamingQuery): Boolean = {
+    import scala.jdk.CollectionConverters._
+    q.lastProgress.stateOperators.exists(_.customMetrics.keySet.asScala
+      .exists(_.startsWith("rocksdb")))
+  }
+
   /** One GFA line-DataFrame per string (with lineno, as readLines yields). */
   def gfaLines(lines: String*): org.apache.spark.sql.DataFrame = {
     import spark.implicits._

@@ -6,7 +6,8 @@ import graft.SparkSuite
 import graft.gfa.{GfaAnalysis, GfaExport}
 
 /** Guard rails: R-guards (test_limits.py / test_warnings.py analogs) and
-  * the counted side outputs of the candidate caps.
+  * the counted side outputs of the candidate caps, and the input contract
+  * of [[Scans.wide]].
   */
 class GuardsSpec extends SparkSuite {
   import spark.implicits._
@@ -68,5 +69,13 @@ class GuardsSpec extends SparkSuite {
     // weighted edges honor the same cap
     val w = Overlap.weightedEdges(ct).collect()
     assert(w.length == 1 && w.head.getAs[Double]("weight") == 1.0)
+  }
+
+  test("Scans.wide rejects an input whose plan has an Exchange") {
+    val df = (0 until 10).map(i => (i % 3, i)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException](Scans.wide(df.groupBy("k").count()))
+    assert(e.getMessage.contains("shuffle-free"))
+    // a narrow chain over a scan passes and keeps its rows
+    assert(Scans.wide(df.where(col("v") > 2)).count() == 7)
   }
 }

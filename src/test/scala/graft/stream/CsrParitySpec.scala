@@ -1,7 +1,9 @@
 package graft.stream
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkSuite
 import graft.gen.SynthTranscripts
@@ -61,9 +63,11 @@ class CsrParitySpec extends SparkSuite {
 
   test("CSR state runs identically on the RocksDB state store provider") {
     val data = SynthTranscripts.turnRows(4, 7)
-    def run(name: String) = {
+    // rows of the sink, and whether the query's state store reported
+    // RocksDB metrics (the provider is frozen into the query at start)
+    def run(s: SparkSession, name: String) = {
       val ms = MemoryStream[Turn](
-        implicitly[org.apache.spark.sql.Encoder[Turn]], spark.sqlContext)
+        implicitly[org.apache.spark.sql.Encoder[Turn]], s.sqlContext)
       val q = CsrState.attach(
           ms.toDS().withWatermark("ts", "1 minute"), "5 minutes")
         .toDF().writeStream.format("memory")
@@ -71,10 +75,13 @@ class CsrParitySpec extends SparkSuite {
       ms.addData(data.sortBy(_.ts.getTime))
       q.processAllAvailable()
       q.stop()
-      spark.table(name).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      (s.table(name).collect().map(_.toSeq.mkString("|")).sorted.toSeq,
+       onRocksDb(q))
     }
-    val heap = run("csr_heap")
-    val rocks = StateStores.withRocksDb(spark)(run("csr_rocks"))
+    val (heap, heapOnRocks) = run(spark, "csr_heap")
+    val (rocks, rocksOnRocks) =
+      run(Bridge.child(spark, StateStores.RocksDbConf: _*), "csr_rocks")
+    assert(!heapOnRocks && rocksOnRocks)
     assert(rocks == heap && rocks.nonEmpty)
   }
 

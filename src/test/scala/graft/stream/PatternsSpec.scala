@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkSuite
 import graft.gen.SynthTranscripts
@@ -80,31 +81,30 @@ class PatternsSpec extends SparkSuite {
   test("transformWithState path (RocksDB, explicit timers) == batch islands") {
     val data = SynthTranscripts.turnRows(30, 12)
     val maxTs = data.map(_.ts.getTime).max
-    val streamed = StateStores.withRocksDb(spark) {
-      val ms = MemoryStream[Turn](
-        implicitly[org.apache.spark.sql.Encoder[Turn]], spark.sqlContext)
-      val out = Patterns.attachTws(
-        ms.toDF().withWatermark("ts", "1 minute")
-          .as[Turn].filter(_.tool.isDefined),
-        minLen = 2, idleTimeout = "48 hours")
-      val query = out.toDF().writeStream.format("memory")
-        .queryName(s"runs_tws_${System.nanoTime()}")
-        .outputMode("append").start()
-      val sorted = data.sortBy(_.ts.getTime)
-      val (b1, b2) = sorted.splitAt(sorted.length / 2)
-      ms.addData(b1); query.processAllAvailable()
-      ms.addData(b2); query.processAllAvailable()
-      (1 to 2).foreach { i =>
-        ms.addData(Seq(Turn("zz_sentinel", 0, "user", "s", Some("t"),
-          new Timestamp(maxTs + i * 14L * 24 * 3600 * 1000))))
-        query.processAllAvailable()
-      }
-      val rows = spark.table(query.name)
-        .where(col("conv_id") =!= "zz_sentinel")
-        .as[(String, Int, Int, Int, Int)].collect().toSet
-      query.stop()
-      rows
+    val rocks = Bridge.child(spark, StateStores.RocksDbConf: _*)
+    val ms = MemoryStream[Turn](
+      implicitly[org.apache.spark.sql.Encoder[Turn]], rocks.sqlContext)
+    val out = Patterns.attachTws(
+      ms.toDF().withWatermark("ts", "1 minute")
+        .as[Turn].filter(_.tool.isDefined),
+      minLen = 2, idleTimeout = "48 hours")
+    val query = out.toDF().writeStream.format("memory")
+      .queryName(s"runs_tws_${System.nanoTime()}")
+      .outputMode("append").start()
+    val sorted = data.sortBy(_.ts.getTime)
+    val (b1, b2) = sorted.splitAt(sorted.length / 2)
+    ms.addData(b1); query.processAllAvailable()
+    ms.addData(b2); query.processAllAvailable()
+    (1 to 2).foreach { i =>
+      ms.addData(Seq(Turn("zz_sentinel", 0, "user", "s", Some("t"),
+        new Timestamp(maxTs + i * 14L * 24 * 3600 * 1000))))
+      query.processAllAvailable()
     }
+    val streamed = rocks.table(query.name)
+      .where(col("conv_id") =!= "zz_sentinel")
+      .as[(String, Int, Int, Int, Int)].collect().toSet
+    query.stop()
+    assert(onRocksDb(query))
     val batch = Patterns.toolRuns(spark.createDataset(data).toDF(), minLen = 2)
       .as[(String, Int, Int, Int, Int)].collect().toSet
     assert(streamed === batch)

@@ -18,18 +18,4 @@ class StatePartitionsSpec extends SparkSuite {
       StatePartitions.forVolume(1, minParts = 4, maxParts = 2)
     }
   }
-
-  test("scoped sets shuffle partitions for the block and restores after") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val seen = StatePartitions.scoped(spark, 3) {
-      spark.conf.get("spark.sql.shuffle.partitions")
-    }
-    assert(seen == "3")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
-    // restored even when the block throws
-    intercept[RuntimeException] {
-      StatePartitions.scoped(spark, 5)(throw new RuntimeException("x"))
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
-  }
 }

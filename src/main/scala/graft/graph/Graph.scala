@@ -1,13 +1,21 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Generic distributed graph kernels over edge DataFrames (src:string,
+/** Generic graph kernels over edge DataFrames (src:string,
   * dst:string[, weight:double]). Used both by the GFA-semantics layer and
-  * by the transcript graph; no driver-side adjacency is ever materialized.
+  * by the transcript graph. Components and unweighted BFS solve a graph
+  * within [[CcSmallGraphNodes]]/[[BroadcastFrontierRows]] on the driver,
+  * larger ones as Spark loops.
   */
 object Graph {
 
@@ -85,13 +93,14 @@ object Graph {
   /** Undirected view: each edge plus its reverse in one pass (explode —
     * a self-union would recompute the upstream twice), dedup'd.
     */
-  def undirected(edges: DataFrame): DataFrame =
+  def undirected(edges: DataFrame): DataFrame = bothWays(edges).distinct()
+
+  private def bothWays(edges: DataFrame): DataFrame =
     edges
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
 
   /** Per-node degree (A7), matching nx semantics on simple graphs:
     * undirected = distinct-neighbor count; directed = in-degree +
@@ -117,105 +126,109 @@ object Graph {
                       greatest(col("src"), col("dst")).as("b"))
       .distinct().count()
 
-  /** Node-count threshold for the components fast path: at or below it
-    * the loop runs directly on node strings with the label table
-    * broadcast each round (dimension-sized graphs skip the id-indexing
-    * pass entirely); above it, labels are dense lexicographic-rank longs
-    * — per-round shuffles then carry 16-byte rows and compare longs.
+  /** Node-count bound of the components driver path (union-find after
+    * one collect); above it the Spark loop runs on rank-id long labels.
     */
   val CcSmallGraphNodes: Long = 200000L
 
-  /** Connected-component count via iterative min-label propagation (A8;
-    * reference: nx.number_connected_components, analysis.py:54).
-    *
-    * Each round: every node adopts min(own label, neighbor labels);
-    * converges in O(diameter) rounds. `localCheckpoint` truncates lineage
-    * per round so plans stay bounded. Nodes with no edges count as
-    * singleton components (pass `allNodes` to include isolated nodes).
+  /** Connected components (A8; reference: nx.number_connected_components,
+    * analysis.py:54) as (node, label), the label being the component's
+    * minimum node in Spark's string order (UTF-8 bytes). Nodes with no
+    * edges count as singleton components (pass `allNodes` to include
+    * isolated nodes). Within [[CcSmallGraphNodes]] nodes and
+    * [[BroadcastFrontierRows]] edges, where each Spark round would be
+    * about four jobs of fixed cost, the graph is solved on the driver;
+    * larger ones by min-label propagation ([[connectedComponentsLoop]]).
     */
   def connectedComponents(edges: DataFrame, allNodes: Option[DataFrame] = None,
                           maxIter: Int = 200): DataFrame = {
-    val spark = edges.sparkSession
-    val undStr = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesStr = allNodes
-      .map(_.select(col("node")))
-      .getOrElse(undStr.select(col("src").as("node")).distinct())
-    val allStr = nodesStr
-      .union(undStr.select(col("src").as("node"))).distinct()
-    val nNodes = allStr.count()
-    // undStr is materialized by the count above, so this second count is
-    // a cached-block pass; the loop scope must track edges too (a dense
-    // small-node graph can still carry a large edge set)
-    val nEdges = undStr.count()
-    val loopRows = math.max(nNodes, nEdges)
-    if (nNodes <= CcSmallGraphNodes) {
-      // SMALL-GRAPH PATH: string labels, per-round broadcast of the
-      // node-sized label table (the edge set never re-shuffles). A
-      // per-round broadcast of a ~1M-row table was measured to cost more
-      // (driver collect + hashmap build each round) than it saves, hence
-      // the cap.
-      val r = inLoopSession(spark, loopRows) { ls =>
-        ccLoop(loopCompact(spark, Bridge.rebind(undStr, ls), loopRows),
-               Bridge.rebind(allStr, ls), bcastLabels = true, maxIter)
-      }
-      undStr.unpersist(blocking = false)
-      r
-    } else {
-      // LARGE-GRAPH PATH: the loop runs on DENSE LONG IDS — per-round
-      // shuffles carry 16-byte rows instead of string pairs. The ids are
-      // the LEXICOGRAPHIC RANKS of the node strings: convergence round
-      // count is sensitive to the label ordering (measured: arbitrary
-      // hash-order ids crawled 60+ rounds on inputs where rank ids
-      // converge in ~14, exactly like the string labels whose comparisons
-      // they reproduce), and the final representative is re-derived as
-      // the min node STRING per component (the reference's semantics)
-      // regardless of which internal label won.
-      val idMap = spark.createDataFrame(
-        allStr.orderBy("node").rdd.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(r.getString(0), i)
-        },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType))))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val und = undStr
-        .join(idMap.select(col("node").as("src"), col("id").as("src_id")), "src")
-        .join(idMap.select(col("node").as("dst"), col("id").as("dst_id")), "dst")
-        .select(col("src_id").as("src"), col("dst_id").as("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      und.count()
-      undStr.unpersist(blocking = false)
-      try inLoopSession(spark, loopRows) { ls =>
-        val ids = Bridge.rebind(idMap, ls)
-        val labels = ccLoop(loopCompact(spark, Bridge.rebind(und, ls), loopRows),
-                            ids.select(col("id").as("node")),
-                            bcastLabels = false, maxIter)
-        // map internal ids back to node strings and re-derive each
-        // component's representative as its minimum node string
-        val out = labels
-          .join(ids.select(col("id"), col("node").as("node_str")),
-                labels("node") === col("id"))
-          .select(col("node_str").as("node"), col("label").as("ilabel"))
-        val rep = out.groupBy("ilabel").agg(min("node").as("label"))
-        out.join(rep, "ilabel").select(col("node"), col("label"))
-          .transform(ckpt)
-      } finally {
-        und.unpersist(blocking = false)
-        idMap.unpersist(blocking = false)
-      }
+    val (und, nodes) = ccInputs(edges, allNodes)
+    val (nNodes, nEdges) = (nodes.count(), und.count()) // und: cached by then
+    if (nNodes <= CcSmallGraphNodes && nEdges <= BroadcastFrontierRows)
+      try ccOnDriver(und, nodes) finally und.unpersist(blocking = false)
+    else ccLoop(und, nodes, math.max(nNodes, nEdges), maxIter)
+  }
+
+  /** [[connectedComponents]] through the Spark loop at any size. */
+  private[graph] def connectedComponentsLoop(edges: DataFrame, allNodes: Option[DataFrame],
+                                             maxIter: Int = 200): DataFrame = {
+    val (und, nodes) = ccInputs(edges, allNodes)
+    ccLoop(und, nodes, math.max(nodes.count(), und.count()), maxIter)
+  }
+
+  /** The persisted undirected edges and the (lazy) distinct node set. */
+  private def ccInputs(edges: DataFrame, allNodes: Option[DataFrame]) = {
+    val und = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val ends = und.select(col("src").as("node"))
+    (und, allNodes.fold(ends)(_.select(col("node")).union(ends)).distinct())
+  }
+
+  /** Union-find over the collected graph. Nodes are ranked in Spark's
+    * string order (`UTF8String.compareTo`, unlike `String.compareTo` above
+    * U+FFFF) and a union keeps the lower rank as root, so a root is its
+    * component's minimum. A null node joins no edge, as in an equi-join.
+    */
+  private def ccOnDriver(und: DataFrame, nodes: DataFrame): DataFrame = {
+    val names = nodes.collect().map(_.getString(0))
+    val byRank = names.filter(_ != null)
+      .map(s => (UTF8String.fromString(s), s))
+      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+    val rank = byRank.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, byRank.length)
+    @tailrec def find(i: Int): Int =
+      if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
+    und.where(col("src").isNotNull && col("dst").isNotNull).collect().foreach { r =>
+      val (a, b) = (find(rank(r.getString(0))), find(rank(r.getString(1))))
+      if (a < b) parent(b) = a else parent(a) = b
+    }
+    val rows = byRank.indices.map(i => Row(byRank(i), byRank(find(i)))) ++
+      (if (names.contains(null)) Seq(Row(null, null)) else Nil)
+    und.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", StringType), StructField("label", StringType))))
+  }
+
+  /** The Spark components loop on DENSE LONG IDS (per-round shuffles
+    * carry 16-byte rows): the LEXICOGRAPHIC RANKS of the node strings, as
+    * round count is sensitive to label order (hash-order ids crawled 60+
+    * rounds where rank ids converge in ~14). The representative is
+    * re-derived as the min node STRING per component. Unpersists `undStr`.
+    */
+  private def ccLoop(undStr: DataFrame, allStr: DataFrame, loopRows: Long,
+                     maxIter: Int): DataFrame = {
+    val spark = undStr.sparkSession
+    val idMap = spark.createDataFrame(
+      allStr.orderBy("node").rdd.zipWithIndex.map { case (r, i) => Row(r.getString(0), i) },
+      StructType(Seq(StructField("node", StringType), StructField("id", LongType))))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = undStr
+      .join(idMap.select(col("node").as("src"), col("id").as("src_id")), "src")
+      .join(idMap.select(col("node").as("dst"), col("id").as("dst_id")), "dst")
+      .select(col("src_id").as("src"), col("dst_id").as("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    und.count()
+    undStr.unpersist(blocking = false)
+    try inLoopSession(spark, loopRows) { ls =>
+      val ids = Bridge.rebind(idMap, ls)
+      val labels = propagate(loopCompact(spark, Bridge.rebind(und, ls), loopRows),
+                             ids.select(col("id").as("node")), maxIter)
+      // map internal ids back to node strings and re-derive each
+      // component's representative as its minimum node string
+      val out = labels
+        .join(ids.select(col("id"), col("node").as("node_str")),
+              labels("node") === col("id"))
+        .select(col("node_str").as("node"), col("label").as("ilabel"))
+      val rep = out.groupBy("ilabel").agg(min("node").as("label"))
+      out.join(rep, "ilabel").select(col("node"), col("label"))
+        .transform(ckpt)
+    } finally {
+      und.unpersist(blocking = false)
+      idMap.unpersist(blocking = false)
     }
   }
 
-  /** The min-label-propagation + pointer-jumping loop, label-type
-    * agnostic (strings on the small path, rank longs on the large one).
-    */
-  private def ccLoop(und: DataFrame, nodes: DataFrame, bcastLabels: Boolean,
-                     maxIter: Int): DataFrame = {
-    val labelType = nodes.schema("node").dataType.sql
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
+  /** The min-label-propagation + pointer-jumping rounds over rank ids. */
+  private def propagate(und: DataFrame, nodes: DataFrame,
+                        maxIter: Int): DataFrame = {
     // localCheckpoint RETURNS the truncated Dataset (side-effect-free on
     // the receiver) — always rebind, or lineage grows per round and the
     // discarded checkpoint blocks leak.
@@ -230,28 +243,23 @@ object Graph {
       // once), so convergence detection below needs no extra join —
       // the old per-round join-count job was pure fixed overhead.
       val viaNeighbors = und
-        .join(maybeBcast(labels.withColumnRenamed("node", "dst_n")),
+        .join(labels.withColumnRenamed("node", "dst_n"),
               col("dst") === col("dst_n"))
         .select(col("src").as("node"), col("label"),
-                lit(null).cast(labelType).as("old"))
-      val relaxed0 = labels
+                lit(null).cast(LongType).as("old"))
+      // the pointer-jump below is a self-join: without a barrier both
+      // sides would recompute the edge join + aggregate (measured ~2× the
+      // round cost on a 1M-node graph)
+      val relaxed = labels
         .select(col("node"), col("label"), col("label").as("old"))
         .union(viaNeighbors)
         .groupBy("node").agg(min("label").as("label"), max("old").as("old"))
-      // The pointer-jump below is a self-join. On the SHUFFLE path both
-      // sides would recompute the edge join + aggregate without a barrier
-      // (measured ~2× the round cost on a 1M-node graph) — materialize
-      // once. On the BROADCAST path the build side shares the probe
-      // side's shuffle via ReuseExchange (only the final tiny aggregate
-      // re-runs), so the extra per-round checkpoint job is pure fixed
-      // overhead — skip it.
-      val relaxed = if (bcastLabels) relaxed0 else relaxed0.transform(ckpt)
+        .transform(ckpt)
       // step 2: pointer jumping — adopt the label of one's label node
       // (path compression): turns O(diameter) convergence into
       // O(log diameter), which long chain graphs require
       val jumped = relaxed.as("a")
-        .join(maybeBcast(
-                relaxed.select(col("node").as("l_node"), col("label").as("l_label"))),
+        .join(relaxed.select(col("node").as("l_node"), col("label").as("l_label")),
               col("a.label") === col("l_node"), "left")
         .select(col("a.node").as("node"),
                 least(col("a.label"), coalesce(col("l_label"), col("a.label")))
@@ -290,20 +298,78 @@ object Graph {
     * (the reference's Dijkstra similarly resolves targets as popped).
     * On a large-diameter graph this turns min-distance queries from
     * O(eccentricity) rounds into O(answer) rounds.
+    * Within [[BroadcastFrontierRows]] adjacency rows × distinct tags (what
+    * the broadcast rounds move through the driver, and an output bound)
+    * the BFS runs on the driver, else as a loop ([[multiSourceBfsLoop]]).
     */
   def multiSourceBfsUntil(edges: DataFrame, seeds: DataFrame,
                           stopSet: Option[DataFrame],
                           directed: Boolean = false, maxIter: Int = 512)
       : DataFrame = {
-    // pre-partitioned on the join key: each round's frontier⋈adj then
-    // shuffles ONLY the frontier (the cached relation's hash partitioning
-    // satisfies the join's distribution requirement) — re-shuffling the
-    // full edge set per round was the dominant per-round cost
-    val adjFull = (if (directed) edges.select("src", "dst") else undirected(edges))
-      .repartition(col("src"))
+    val adj = adjacency(edges, directed)
+    val nAdj = adj.count()
+    if (nAdj * seeds.select("tag").distinct().count() > BroadcastFrontierRows)
+      bfsLoop(adj, nAdj, seeds, stopSet, directed, maxIter)
+    else try bfsOnDriver(adj, seeds, stopSet, maxIter)
+    finally adj.unpersist(blocking = false)
+  }
+
+  /** [[multiSourceBfsUntil]] through the Spark loop at any size. */
+  private[graph] def multiSourceBfsLoop(edges: DataFrame, seeds: DataFrame,
+                                        stopSet: Option[DataFrame], directed: Boolean,
+                                        maxIter: Int = 512): DataFrame = {
+    val adj = adjacency(edges, directed)
+    bfsLoop(adj, adj.count(), seeds, stopSet, directed, maxIter)
+  }
+
+  /** The persisted distinct (src, dst) adjacency, pre-partitioned on the
+    * join key so each loop round's frontier⋈adj shuffles ONLY the frontier
+    * (re-shuffling the edges per round was the dominant round cost); the
+    * dedup reuses that one shuffle.
+    */
+  private def adjacency(edges: DataFrame, directed: Boolean): DataFrame =
+    (if (directed) edges.select("src", "dst") else bothWays(edges))
+      .repartition(col("src")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nAdj = adjFull.count()
-    val spark = edges.sparkSession
+
+  /** Level-synchronous BFS of every tag at once over the collected
+    * adjacency, with the loop's semantics: one row per (tag, node) at its
+    * minimum hop count, a stop after the first level that touches
+    * `stopSet`, and the same `maxIter` error. Null nodes join no edge.
+    */
+  private def bfsOnDriver(adj: DataFrame, seeds: DataFrame,
+                          stopSet: Option[DataFrame], maxIter: Int): DataFrame = {
+    val nbrs = adj.where(col("src").isNotNull && col("dst").isNotNull).collect()
+      .groupMap(_.get(0))(_.get(1))
+    val stop = stopSet.fold(Set.empty[Any])(
+      _.select(col("node")).where(col("node").isNotNull).collect().map(_.get(0)).toSet)
+    val s = seeds.select(col("tag"), col("node"))
+    var frontier = s.collect().map(r => (r.get(0), r.get(1))).distinct
+    val seen = mutable.HashSet.from(frontier)
+    val rows = mutable.ArrayBuffer.from(frontier.map(t => Row(t._1, t._2, 0L)))
+    var iter = 0
+    def hit = frontier.exists(t => stop.contains(t._2))
+    var done = hit
+    while (!done && frontier.nonEmpty && iter < maxIter) {
+      iter += 1
+      frontier = for ((tag, node) <- frontier; next <- nbrs.getOrElse(node, Array.empty[Any])
+                      if seen.add((tag, next))) yield (tag, next)
+      rows ++= frontier.map(t => Row(t._1, t._2, iter.toLong))
+      done = hit
+    }
+    if (!done && frontier.nonEmpty)
+      throw new IllegalStateException(
+        s"multiSourceBfs frontier still non-empty after $maxIter rounds " +
+        s"(${frontier.length} nodes); raise maxIter")
+    adj.sparkSession.createDataFrame(rows.asJava, StructType(
+      s.schema.fields.map(_.copy(nullable = true)) :+ StructField("dist", LongType)))
+  }
+
+  /** The Spark BFS loop over the persisted adjacency; unpersists it. */
+  private def bfsLoop(adjFull: DataFrame, nAdj: Long, seeds: DataFrame,
+                      stopSet: Option[DataFrame], directed: Boolean,
+                      maxIter: Int): DataFrame = {
+    val spark = adjFull.sparkSession
     inLoopSession(spark, nAdj) { ls =>
     val adj = loopCompact(spark, Bridge.rebind(adjFull, ls), nAdj)
     var dist = Bridge.rebind(seeds, ls)

@@ -60,9 +60,10 @@ object GraphQueries {
              |  SELECT CAST(2 AS BIGINT), CAST(COALESCE(SUM(n - 2), 0) AS BIGINT)
              |  FROM conv_sizes WHERE n >= 3)
              |SELECT degree, n_nodes FROM deg WHERE n_nodes > 0""".stripMargin)),
-    // A8 under the driver oracle: the GENERIC iterative min-label
-    // propagation kernel on a non-chain graph (conversations linked by
-    // shared turn text — 33 components incl. one of size 11 at sf0.01),
+    // A8 under the driver oracle: the GENERIC components kernel (its
+    // union-find driver path at this size) on a non-chain graph
+    // (conversations linked by shared turn text — 33 components incl. one
+    // of size 11 at sf0.01),
     // oracled by a DuckDB recursive transitive closure. This is the hard
     // signal that the kernel (not a closed form) is correct.
     QueryDef("q_components",

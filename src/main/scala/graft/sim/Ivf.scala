@@ -1,8 +1,11 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
 import graft.functions.VecFunctions.vec_dot
 
@@ -14,7 +17,8 @@ import graft.functions.VecFunctions.vec_dot
   *
   * Scale shape: training runs on a DETERMINISTIC HASH-ORDERED SAMPLE
   * (`sampleFactor` × nClusters vectors — standard IVF practice; the
-  * sample is what Lloyd's per-dimension means shuffle, never the corpus),
+  * sample is collected once and Lloyd's rounds run on the driver, never
+  * over the corpus),
   * and the trained index is a reusable artifact: production callers
   * train once per corpus via [[trainCentroids]] + [[invertedLists]] and
   * run any number of query batches through [[ivfTopKWithLists]]. The
@@ -33,10 +37,14 @@ object Ivf {
   /** Train `nClusters` spherical-k-means centroids (cosine assignment,
     * per-dimension mean update, `iters` Lloyd rounds) on a deterministic
     * sample: the `sampleFactor × nClusters` corpus vectors with the
-    * smallest xxhash64(id) — one TakeOrdered pass over the corpus, after
-    * which every Lloyd round shuffles sample×dims rows instead of
-    * corpus×dims (at 768-dim/100-TB scale the full-corpus variant is a
-    * bigger job than the search it accelerates). Clusters that lose all
+    * smallest xxhash64(id) — one TakeOrdered pass over the corpus, whose
+    * bounded result is collected once; the Lloyd rounds then run on the
+    * driver over sample×clusters×dims (at 768-dim/100-TB scale the
+    * full-corpus variant is a bigger job than the search it accelerates).
+    * The rounds match [[assign]] (its cosine; NaN above every number;
+    * ties to the lowest cluster_id; a zero-norm divisor, where SQL
+    * division gives null or fails, ranks below every number) and a
+    * double `avg` per dimension cast to float. Clusters that lose all
     * members in a round keep their previous centroid (a silently
     * shrinking centroid table would degrade nprobe recall with no
     * signal). Returns (cluster_id, centroid: array<float>).
@@ -45,46 +53,45 @@ object Ivf {
                      vecCol: String = "embedding",
                      nClusters: Int = 16, iters: Int = 3,
                      sampleFactor: Int = 100): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val vecs = corpus
+    val sample = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .orderBy(xxhash64(col("id")), col("id"))
       .limit(nClusters * sampleFactor)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // init = the nClusters hash-smallest sample rows; ids are assigned on
-    // the driver — an nClusters-row dimension table, so collecting it is
-    // O(clusters), and it avoids the single-partition global window a
-    // row_number() ranking would plan (warning noise + a needless funnel)
-    val initRows = vecs.orderBy(xxhash64(col("id")), col("id"))
-      .limit(nClusters).select(col("v")).collect()
-    var centroids = initRows.toSeq.zipWithIndex
-      .map { case (r, i) => (i + 1, r.getSeq[Float](0)) }
-      .toDF("cluster_id", "centroid")
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val assigned = assign(vecs, centroids)
-      val updated = assigned
-        .join(vecs, Seq("id"))
-        .select(col("cluster_id"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cluster_id", "dim")
-        .agg(avg(col("x").cast("double")).as("m"))
-        .groupBy("cluster_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("m")))),
-          e => e.getField("m").cast("float")).as("next"))
-      // empty-cluster carry-forward: left join against the previous round
-      val merged = centroids
-        .select(col("cluster_id"), col("centroid").as("prev"))
-        .join(updated, Seq("cluster_id"), "left")
-        .select(col("cluster_id"),
-                coalesce(col("next"), col("prev")).as("centroid"))
-      centroids = merged.localCheckpoint(true)
-      i += 1
+      .select(col("v")).collect().map(_.getSeq[Float](0).toArray)
+    def dot(a: Array[Float], b: Array[Float]): Double = { // FloatVecDot's order
+      var s = 0.0
+      var i = 0
+      while (i < math.min(a.length, b.length)) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
     }
-    vecs.unpersist(blocking = false)
-    centroids
+    val norms = sample.map(v => math.sqrt(dot(v, v)))
+    // init = the nClusters hash-smallest sample rows, cluster ids from 1
+    var cents = sample.take(nClusters)
+    for (_ <- 0 until iters) {
+      val cNorms = cents.map(c => math.sqrt(dot(c, c)))
+      def sim(j: Int, k: Int): Double = {
+        val den = norms(j) * cNorms(k)
+        if (den == 0.0) Double.NegativeInfinity else dot(sample(j), cents(k)) / den
+      }
+      val members = sample.indices.groupBy { j =>
+        val sims = cents.indices.map(sim(j, _))
+        sims.indices.reduceLeft((best, k) =>
+          if (SQLOrderingUtil.compareDoubles(sims(k), sims(best)) > 0) k else best)
+      }
+      cents = cents.indices.map { k =>
+        members.get(k).fold(cents(k)) { js =>
+          val vs = js.map(sample)
+          Array.tabulate(vs.map(_.length).max) { d =>
+            val xs = vs.collect { case v if d < v.length => v(d).toDouble }
+            (xs.sum / xs.length).toFloat
+          }
+        }
+      }.toArray
+    }
+    corpus.sparkSession.createDataFrame(
+      cents.toSeq.zipWithIndex.map { case (c, i) => Row(i + 1, c.toSeq) }.asJava,
+      StructType(Seq(StructField("cluster_id", IntegerType, nullable = false),
+                     StructField("centroid", ArrayType(FloatType)))))
   }
 
   /** Hard assignment: nearest centroid by cosine (broadcast centroids,

@@ -43,11 +43,15 @@ object TranscriptSink {
     // partitionBy(day) then writes tasks × days small files per batch —
     // a file-count explosion that degrades every later read. Clustered,
     // each day lands in a few contiguous tasks: O(tasks) files per batch.
+    // Checkpointed once: the days collect, the append and the lineage
+    // would otherwise each re-read the batch, re-run the dedup shuffle and
+    // re-sample the range bounds.
     val withDay = batch
       .where(col("ts").isNotNull)
       .dropDuplicates(mergeKeys)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .repartitionByRange(col("day"), col("conv_id"))
+      .localCheckpoint(true)
     val days = withDay.select("day").distinct().collect().map(_.getString(0))
     if (days.isEmpty) return
 

@@ -46,7 +46,7 @@ class GraphSpec extends SparkSuite {
   }
 
   test("undirected frontier filter == full-state filter on random graphs") {
-    // the undirected BFS anti-joins only the previous two frontier deltas
+    // the undirected BFS loop anti-joins only the previous two frontier deltas
     // (hop distance changes by ≤1 across an undirected edge); the
     // directed path anti-joins the full accumulated state. Running the
     // directed kernel over the explicit symmetric closure must therefore
@@ -61,11 +61,62 @@ class GraphSpec extends SparkSuite {
       val seeds = Seq(("a", "n0"), ("b", "n1"), ("b", "n2")).toDF("tag", "node")
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      val viaFrontier = rows(Graph.multiSourceBfs(edges, seeds, directed = false))
+      val viaFrontier = rows(Graph.multiSourceBfsLoop(edges, seeds, None, directed = false))
       val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val viaFullState = rows(Graph.multiSourceBfs(sym, seeds, directed = true))
+      val viaFullState = rows(Graph.multiSourceBfsLoop(sym, seeds, None, directed = true))
       assert(viaFrontier == viaFullState, s"trial $trial: graphs disagree")
     }
+  }
+
+  /** A random sparse graph (hubs, odd cycles, isolated nodes) whose node
+    * names mix prefixes that sort differently in UTF-16 and in UTF-8:
+    * "😀" (U+1F600) is below "｡" (U+FF61) for `String.compareTo` and
+    * above it in Spark's byte order.
+    */
+  private def randomGraph(rnd: scala.util.Random, n: Int) = {
+    val prefixes = Seq("n", "｡", "😀", "é")
+    val names = (0 until n).map(i => prefixes(rnd.nextInt(prefixes.size)) + i)
+    val pairs = Seq.fill(n)((names(rnd.nextInt(n)), names(rnd.nextInt(n))))
+      .filter(e => e._1 != e._2).distinct
+    (names, pairs.toDF("src", "dst"))
+  }
+
+  test("connected components: driver union-find == Spark loop, labels in UTF-8 order") {
+    val rnd = new scala.util.Random(11)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    for (trial <- 1 to 3) {
+      val (names, edges) = randomGraph(rnd, 30 + rnd.nextInt(20))
+      val nodes = names.toDF("node")
+      assert(rows(Graph.connectedComponents(edges, Some(nodes))) ==
+             rows(Graph.connectedComponentsLoop(edges, Some(nodes))), s"trial $trial")
+    }
+    assert(rows(Graph.connectedComponents(edgeDf(("😀", "｡")))) ==
+           Set(("😀", "｡"), ("｡", "｡")))
+  }
+
+  test("BFS: driver pass == Spark loop, directed and undirected, with and without a stop set") {
+    val rnd = new scala.util.Random(5)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    for (trial <- 1 to 2; directed <- Seq(false, true)) {
+      val (names, edges) = randomGraph(rnd, 25 + rnd.nextInt(10))
+      val seeds = Seq(("a", names(0)), ("b", names(1)), ("b", names(2))).toDF("tag", "node")
+      for (stop <- Seq(None, Some(Seq(names(3), names(4)).toDF("node"))))
+        assert(rows(Graph.multiSourceBfsUntil(edges, seeds, stop, directed)) ==
+               rows(Graph.multiSourceBfsLoop(edges, seeds, stop, directed)),
+               s"trial $trial directed=$directed stop=${stop.isDefined}")
+    }
+  }
+
+  test("BFS on the driver: maxIter throws unless the stop set ends the walk first") {
+    val chain = edgeDf(("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("n4", "n5"))
+    val seeds = Seq(("t", "n1")).toDF("tag", "node")
+    val e = intercept[IllegalStateException](Graph.multiSourceBfs(chain, seeds, maxIter = 2))
+    assert(e.getMessage.contains("after 2 rounds (1 nodes)"))
+    val d = Graph.multiSourceBfsUntil(chain, seeds, Some(Seq("n3").toDF("node")), maxIter = 2)
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+    assert(d == Map("n1" -> 0L, "n2" -> 1L, "n3" -> 2L))
   }
 
   test("multi-source BFS hop distances on a chain") {

@@ -10,9 +10,10 @@ alternating which side goes first. For each workload and each end-to-end
 metric of BENCHMARK.json it prints both sides' median and quartiles, the
 pairs the change won (ties count for neither) and two verdicts:
 
-  claim  GAIN when the change won at least 9/10 of the pairs and the
-         medians differ by more than the base's interquartile range,
-         else "no gain";
+  claim  GAIN when the change won at least 9/10 of all pairs run (a pair
+         missing a side's result counts as lost), the medians differ by
+         more than the base's interquartile range and the change failed
+         no more operations than the base, else "no gain";
   bound  "ok" when the change's median is no worse than the base's by
          more than the metric's bound; "unresolved" when it is worse but
          the base's own spread is wider than the bound, unless every
@@ -23,6 +24,7 @@ Nothing under perfbench/ is edited; each side builds its own copy.
 import argparse
 import json
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -56,12 +58,12 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def verdicts(base, change, better, bound):
+def verdicts(base, change, better, bound, pairs, more_fails):
     higher = better == "higher"
     won = sum(1 for b, c in zip(base, change) if (c > b if higher else c < b))
     b1, bm, b3 = quartiles(base)
     _, cm, _ = quartiles(change)
-    gain = won >= 0.9 * len(base) and abs(cm - bm) > (b3 - b1) and \
+    gain = won >= 0.9 * pairs and abs(cm - bm) > (b3 - b1) and not more_fails and \
         (cm > bm if higher else cm < bm)
     worse_by = (bm - cm) / bm if higher else (cm - bm) / bm
     all_better = (min(change) > max(base)) if higher else (max(change) < min(base))
@@ -87,6 +89,7 @@ def main() -> int:
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     metrics = bench["end_to_end"]
     workloads = args.workloads.split(",")
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))  # run the cleanup below
     tmp = Path(tempfile.mkdtemp(prefix="perf_pairs-"))
     results = {w: {"base": [], "change": []} for w in workloads}
     try:
@@ -123,10 +126,11 @@ def main() -> int:
             if not base:
                 print(f"{w:10} {name:16} no complete pair")
                 continue
-            won, claim, bnd = verdicts(base, change, m["better"], m["bound"])
+            won, claim, bnd = verdicts(base, change, m["better"], m["bound"], args.pairs,
+                                       fails["change"] > fails["base"])
             fmt = lambda xs: "/".join(f"{x:.1f}" for x in quartiles(xs))
             print(f"{w:10} {name:16} {fmt(base):>28} {fmt(change):>28}"
-                  f" {won:>3}/{len(ok):<2} {claim:>8} {bnd:>10}")
+                  f" {won:>3}/{args.pairs:<2} {claim:>8} {bnd:>10}")
         print(f"{w:10} failed ops: base {fails['base']}, change {fails['change']};"
               f" complete pairs {len(ok)}/{args.pairs}")
     return 0

@@ -1,6 +1,5 @@
 package graft.graph
 
-import scala.annotation.tailrec
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -126,8 +125,9 @@ object Graph {
                       greatest(col("src"), col("dst")).as("b"))
       .distinct().count()
 
-  /** Node-count bound of the components driver path (union-find after
-    * one collect); above it the Spark loop runs on rank-id long labels.
+  /** Node-count bound of the components driver path (union-find over the
+    * collected nodes and per-partition spanning forests); above it the
+    * Spark loop runs on rank-id long labels.
     */
   val CcSmallGraphNodes: Long = 200000L
 
@@ -135,22 +135,22 @@ object Graph {
     * analysis.py:54) as (node, label), the label being the component's
     * minimum node in Spark's string order (UTF-8 bytes). Nodes with no
     * edges count as singleton components (pass `allNodes` to include
-    * isolated nodes). Within [[CcSmallGraphNodes]] nodes and
-    * [[BroadcastFrontierRows]] edges, where each Spark round would be
-    * about four jobs of fixed cost, the graph is solved on the driver;
-    * larger ones by min-label propagation ([[connectedComponentsLoop]]).
+    * isolated nodes). Within [[CcSmallGraphNodes]] nodes, where each
+    * Spark round would be about four jobs of fixed cost, the graph is
+    * solved on the driver; larger ones by min-label propagation
+    * ([[connectedComponentsLoop]]).
     */
   def connectedComponents(edges: DataFrame, allNodes: Option[DataFrame] = None,
                           maxIter: Int = 200): DataFrame = {
     val (und, nodes) = ccInputs(edges, allNodes)
-    val (nNodes, nEdges) = (nodes.count(), und.count()) // und: cached by then
-    if (nNodes <= CcSmallGraphNodes && nEdges <= BroadcastFrontierRows)
+    val nNodes = nodes.count() // und: cached by then
+    if (nNodes <= CcSmallGraphNodes)
       try ccOnDriver(und, nodes) finally und.unpersist(blocking = false)
-    else ccLoop(und, nodes, math.max(nNodes, nEdges), maxIter)
+    else ccLoop(und, nodes, math.max(nNodes, und.count()), maxIter)
   }
 
   /** [[connectedComponents]] through the Spark loop at any size. */
-  private[graph] def connectedComponentsLoop(edges: DataFrame, allNodes: Option[DataFrame],
+  private[graft] def connectedComponentsLoop(edges: DataFrame, allNodes: Option[DataFrame],
                                              maxIter: Int = 200): DataFrame = {
     val (und, nodes) = ccInputs(edges, allNodes)
     ccLoop(und, nodes, math.max(nodes.count(), und.count()), maxIter)
@@ -163,26 +163,24 @@ object Graph {
     (und, allNodes.fold(ends)(_.select(col("node")).union(ends)).distinct())
   }
 
-  /** Union-find over the collected graph. Nodes are ranked in Spark's
-    * string order (`UTF8String.compareTo`, unlike `String.compareTo` above
-    * U+FFFF) and a union keeps the lower rank as root, so a root is its
-    * component's minimum. A null node joins no edge, as in an equi-join.
+  /** Union-find over the collected nodes. Each edge partition first
+    * reduces its pairs (each once: `src < dst`, which also drops null
+    * ends, as an equi-join would) to a spanning forest, so one collect
+    * brings at most partitions × (nodes − 1) edges to the driver however
+    * dense the graph. The label is the component's minimum in Spark's
+    * string order (`UTF8String.compareTo`, unlike `String.compareTo`
+    * above U+FFFF).
     */
   private def ccOnDriver(und: DataFrame, nodes: DataFrame): DataFrame = {
-    val names = nodes.collect().map(_.getString(0))
-    val byRank = names.filter(_ != null)
-      .map(s => (UTF8String.fromString(s), s))
-      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-    val rank = byRank.iterator.zipWithIndex.toMap
-    val parent = Array.range(0, byRank.length)
-    @tailrec def find(i: Int): Int =
-      if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
-    und.where(col("src").isNotNull && col("dst").isNotNull).collect().foreach { r =>
-      val (a, b) = (find(rank(r.getString(0))), find(rank(r.getString(1))))
-      if (a < b) parent(b) = a else parent(a) = b
-    }
-    val rows = byRank.indices.map(i => Row(byRank(i), byRank(find(i)))) ++
-      (if (names.contains(null)) Seq(Row(null, null)) else Nil)
+    val forest = und.where(col("src") < col("dst")).rdd.mapPartitions { it =>
+      val uf = new UnionFind
+      it.map(r => (r.getString(0), r.getString(1))).filter { case (a, b) => uf.union(a, b) }
+    }.collect()
+    val uf = new UnionFind
+    forest.foreach { case (a, b) => uf.union(a, b) }
+    val sparkOrder = Ordering.by[String, UTF8String](UTF8String.fromString)
+    val rows = nodes.collect().map(_.getString(0)).groupBy(uf.root).values.toSeq
+      .flatMap { ms => val label = ms.min(sparkOrder); ms.map(Row(_, label)) }
     und.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
       StructField("node", StringType), StructField("label", StringType))))
   }
@@ -197,7 +195,7 @@ object Graph {
                      maxIter: Int): DataFrame = {
     val spark = undStr.sparkSession
     val idMap = spark.createDataFrame(
-      allStr.orderBy("node").rdd.zipWithIndex.map { case (r, i) => Row(r.getString(0), i) },
+      allStr.orderBy("node").rdd.zipWithIndex().map { case (r, i) => Row(r.getString(0), i) },
       StructType(Seq(StructField("node", StringType), StructField("id", LongType))))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val und = undStr
@@ -301,6 +299,8 @@ object Graph {
     * Within [[BroadcastFrontierRows]] adjacency rows × distinct tags (what
     * the broadcast rounds move through the driver, and an output bound)
     * the BFS runs on the driver, else as a loop ([[multiSourceBfsLoop]]).
+    * The seeds are collected once when the adjacency alone is within the
+    * bound; that collect also counts the tags.
     */
   def multiSourceBfsUntil(edges: DataFrame, seeds: DataFrame,
                           stopSet: Option[DataFrame],
@@ -308,14 +308,17 @@ object Graph {
       : DataFrame = {
     val adj = adjacency(edges, directed)
     val nAdj = adj.count()
-    if (nAdj * seeds.select("tag").distinct().count() > BroadcastFrontierRows)
-      bfsLoop(adj, nAdj, seeds, stopSet, directed, maxIter)
-    else try bfsOnDriver(adj, seeds, stopSet, maxIter)
-    finally adj.unpersist(blocking = false)
+    val s = seeds.select(col("tag"), col("node"))
+    Option.when(nAdj <= BroadcastFrontierRows)(
+        s.collect().map(r => (r.get(0), r.get(1))).distinct)
+      .filter(l => nAdj * l.map(_._1).distinct.length <= BroadcastFrontierRows)
+      .fold(bfsLoop(adj, nAdj, seeds, stopSet, directed, maxIter)) { l =>
+        try bfsOnDriver(adj, s.schema, l, stopSet, maxIter) finally adj.unpersist(blocking = false)
+      }
   }
 
   /** [[multiSourceBfsUntil]] through the Spark loop at any size. */
-  private[graph] def multiSourceBfsLoop(edges: DataFrame, seeds: DataFrame,
+  private[graft] def multiSourceBfsLoop(edges: DataFrame, seeds: DataFrame,
                                         stopSet: Option[DataFrame], directed: Boolean,
                                         maxIter: Int = 512): DataFrame = {
     val adj = adjacency(edges, directed)
@@ -337,14 +340,13 @@ object Graph {
     * minimum hop count, a stop after the first level that touches
     * `stopSet`, and the same `maxIter` error. Null nodes join no edge.
     */
-  private def bfsOnDriver(adj: DataFrame, seeds: DataFrame,
+  private def bfsOnDriver(adj: DataFrame, seedSchema: StructType, seeds: Array[(Any, Any)],
                           stopSet: Option[DataFrame], maxIter: Int): DataFrame = {
     val nbrs = adj.where(col("src").isNotNull && col("dst").isNotNull).collect()
       .groupMap(_.get(0))(_.get(1))
     val stop = stopSet.fold(Set.empty[Any])(
       _.select(col("node")).where(col("node").isNotNull).collect().map(_.get(0)).toSet)
-    val s = seeds.select(col("tag"), col("node"))
-    var frontier = s.collect().map(r => (r.get(0), r.get(1))).distinct
+    var frontier = seeds
     val seen = mutable.HashSet.from(frontier)
     val rows = mutable.ArrayBuffer.from(frontier.map(t => Row(t._1, t._2, 0L)))
     var iter = 0
@@ -362,7 +364,7 @@ object Graph {
         s"multiSourceBfs frontier still non-empty after $maxIter rounds " +
         s"(${frontier.length} nodes); raise maxIter")
     adj.sparkSession.createDataFrame(rows.asJava, StructType(
-      s.schema.fields.map(_.copy(nullable = true)) :+ StructField("dist", LongType)))
+      seedSchema.fields.map(_.copy(nullable = true)) :+ StructField("dist", LongType)))
   }
 
   /** The Spark BFS loop over the persisted adjacency; unpersists it. */
@@ -700,5 +702,23 @@ object Graph {
       else 2.0 * m / (n.toDouble * (n - 1))
     Seq((n, m, paths, comp, maxDeg, density))
       .toDF("nodes", "edges", "paths", "components", "max_degree", "density")
+  }
+}
+
+/** Union-find over strings with path halving; `union` tells whether the
+  * pair joined two trees. Top-level so Spark closures can build one.
+  */
+private final class UnionFind {
+  private val up = mutable.HashMap.empty[String, String]
+
+  def root(n: String): String = {
+    var x = n
+    while (up.contains(x)) { up.get(up(x)).foreach(up(x) = _); x = up(x) }
+    x
+  }
+
+  def union(a: String, b: String): Boolean = {
+    val (ra, rb) = (root(a), root(b))
+    ra != rb && { up(ra) = rb; true }
   }
 }

@@ -18,7 +18,7 @@ import graft.functions.VecFunctions.vec_dot
   * Scale shape: training runs on a DETERMINISTIC HASH-ORDERED SAMPLE
   * (`sampleFactor` × nClusters vectors — standard IVF practice; the
   * sample is collected once and Lloyd's rounds run on the driver, never
-  * over the corpus),
+  * over the corpus, so the sample must fit the driver),
   * and the trained index is a reusable artifact: production callers
   * train once per corpus via [[trainCentroids]] + [[invertedLists]] and
   * run any number of query batches through [[ivfTopKWithLists]]. The
@@ -38,10 +38,12 @@ object Ivf {
     * per-dimension mean update, `iters` Lloyd rounds) on a deterministic
     * sample: the `sampleFactor × nClusters` corpus vectors with the
     * smallest xxhash64(id) — one TakeOrdered pass over the corpus, whose
-    * bounded result is collected once; the Lloyd rounds then run on the
-    * driver over sample×clusters×dims (at 768-dim/100-TB scale the
-    * full-corpus variant is a bigger job than the search it accelerates).
-    * The rounds match [[assign]] (its cosine; NaN above every number;
+    * bounded result is collected once; the Lloyd rounds then run on one
+    * driver thread. Training is therefore driver-bound: memory in
+    * `nClusters × sampleFactor × dims` (and the collect by
+    * `spark.driver.maxResultSize`), time in that times `nClusters × iters`;
+    * only the sample's TakeOrdered scales with the corpus. The rounds
+    * match [[assign]] (its cosine; NaN above every number;
     * ties to the lowest cluster_id; a zero-norm divisor, where SQL
     * division gives null or fails, ranks below every number) and a
     * double `avg` per dimension cast to float. Clusters that lose all

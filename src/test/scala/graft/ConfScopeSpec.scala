@@ -39,9 +39,9 @@ class ConfScopeSpec extends SparkSuite {
 
   test("graph loop, kNN top-k and a RocksDB stream build keep the caller's conf") {
     val before = spark.conf.getAll
-    // a tiny graph: the loop runs with 1 partition and AQE off
+    // a tiny graph through the Spark loop: it runs with 1 partition and AQE off
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("src", "dst")
-    assert(Graph.connectedComponents(edges).select("label").distinct().count() == 2)
+    assert(Graph.connectedComponentsLoop(edges, None).select("label").distinct().count() == 2)
     val emb = (0 until 20).map(i => (i.toLong, Array(i.toFloat, 1f, (i % 3).toFloat)))
       .toDF("vec_id", "embedding")
     val top = Knn.bruteTopK(emb, emb, 3)

@@ -138,15 +138,16 @@ object Graph {
     * isolated nodes). Within [[CcSmallGraphNodes]] nodes, where each
     * Spark round would be about four jobs of fixed cost, the graph is
     * solved on the driver; larger ones by min-label propagation
-    * ([[connectedComponentsLoop]]).
+    * ([[connectedComponentsLoop]]). One bounded collect of the node set
+    * both picks the path and supplies the driver pass its nodes.
     */
   def connectedComponents(edges: DataFrame, allNodes: Option[DataFrame] = None,
                           maxIter: Int = 200): DataFrame = {
     val (und, nodes) = ccInputs(edges, allNodes)
-    val nNodes = nodes.count() // und: cached by then
-    if (nNodes <= CcSmallGraphNodes)
-      try ccOnDriver(und, nodes) finally und.unpersist(blocking = false)
-    else ccLoop(und, nodes, math.max(nNodes, und.count()), maxIter)
+    val few = nodes.limit((CcSmallGraphNodes + 1).toInt).collect() // und: cached by then
+    if (few.length <= CcSmallGraphNodes)
+      try ccOnDriver(und, few.map(_.getString(0))) finally und.unpersist(blocking = false)
+    else ccLoop(und, nodes, math.max(nodes.count(), und.count()), maxIter)
   }
 
   /** [[connectedComponents]] through the Spark loop at any size. */
@@ -171,15 +172,15 @@ object Graph {
     * string order (`UTF8String.compareTo`, unlike `String.compareTo`
     * above U+FFFF).
     */
-  private def ccOnDriver(und: DataFrame, nodes: DataFrame): DataFrame = {
+  private def ccOnDriver(und: DataFrame, nodes: Array[String]): DataFrame = {
     val forest = und.where(col("src") < col("dst")).rdd.mapPartitions { it =>
-      val uf = new UnionFind
+      val uf = new UnionFind[String]
       it.map(r => (r.getString(0), r.getString(1))).filter { case (a, b) => uf.union(a, b) }
     }.collect()
-    val uf = new UnionFind
+    val uf = new UnionFind[String]
     forest.foreach { case (a, b) => uf.union(a, b) }
     val sparkOrder = Ordering.by[String, UTF8String](UTF8String.fromString)
-    val rows = nodes.collect().map(_.getString(0)).groupBy(uf.root).values.toSeq
+    val rows = nodes.groupBy(uf.root).values.toSeq
       .flatMap { ms => val label = ms.min(sparkOrder); ms.map(Row(_, label)) }
     und.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
       StructField("node", StringType), StructField("label", StringType))))
@@ -705,19 +706,19 @@ object Graph {
   }
 }
 
-/** Union-find over strings with path halving; `union` tells whether the
-  * pair joined two trees. Top-level so Spark closures can build one.
+/** Union-find with path halving; `union` tells whether the pair joined
+  * two trees. Top-level so Spark closures can build one.
   */
-private final class UnionFind {
-  private val up = mutable.HashMap.empty[String, String]
+private[graft] final class UnionFind[A] {
+  private val up = mutable.HashMap.empty[A, A]
 
-  def root(n: String): String = {
+  def root(n: A): A = {
     var x = n
     while (up.contains(x)) { up.get(up(x)).foreach(up(x) = _); x = up(x) }
     x
   }
 
-  def union(a: String, b: String): Boolean = {
+  def union(a: A, b: A): Boolean = {
     val (ra, rb) = (root(a), root(b))
     ra != rb && { up(ra) = rb; true }
   }

@@ -9,16 +9,18 @@ import org.apache.spark.sql.expressions.Window
   * sequence inverted index, analysis.py:96-107, generalized to a
   * conv×conv graph).
   *
-  * Scale guard: the text self-join is quadratic PER TEXT — a text shared
+  * Scale guard: edge building is quadratic PER TEXT — a text shared
   * by m conversations emits m(m−1)/2 pairs, so one boilerplate string
   * (a common error message) shared by 10⁶ conversations would alone
-  * produce ~5·10¹¹ join rows. [[convText]] therefore df-caps the text
+  * produce ~5·10¹¹ pairs. [[convText]] therefore df-caps the text
   * table: texts shared by more than `maxDf` conversations are dropped
   * from edge building (the same bucket-cap guard as the LSH family,
   * [[graft.text.Dedup]]) and reported by the counted [[droppedTexts]]
   * side output — the reference's blowup-warning philosophy
-  * (builders.py:379-380). The window count rides the same
-  * hash-partition-by-text shuffle the self-join needs anyway.
+  * (builders.py:379-380). The window count rides the hash-partition-by-
+  * text shuffle that edge building then reuses: each text's capped
+  * conversation list expands to its pairs in place ([[edges]]), so the
+  * only other shuffle is the pair dedup or weight count.
   */
 object Overlap {
 
@@ -47,16 +49,25 @@ object Overlap {
   /** Overlap edges (src < dst, distinct) over a df-capped conv-text
     * table.
     */
-  def edges(ct: DataFrame): DataFrame =
-    ct.as("a").join(ct.as("b"),
-        col("a.text") === col("b.text") && col("a.conv_id") < col("b.conv_id"))
-      .select(col("a.conv_id").as("src"), col("b.conv_id").as("dst"))
-      .distinct()
+  def edges(ct: DataFrame): DataFrame = pairsByText(ct).distinct()
 
   /** Overlap edges weighted by the number of shared texts. */
   def weightedEdges(ct: DataFrame): DataFrame =
-    ct.as("a").join(ct.as("b"),
-        col("a.text") === col("b.text") && col("a.conv_id") < col("b.conv_id"))
-      .groupBy(col("a.conv_id").as("src"), col("b.conv_id").as("dst"))
+    pairsByText(ct).groupBy("src", "dst")
       .agg(count(lit(1)).cast("double").as("weight"))
+
+  /** One (src, dst) row per pair of `ct` rows sharing a text with
+    * src < dst — the rows of the text self-join `a.text = b.text AND
+    * a.conv_id < b.conv_id`, duplicates included. Each text's sorted
+    * conversation list expands to its pairs inside one group-by on text,
+    * which needs no shuffle over [[convText]]'s output (already
+    * hash-partitioned by text for the df window); null texts are dropped
+    * first and null conversations never pair, as in the equi-join.
+    */
+  private def pairsByText(ct: DataFrame): DataFrame =
+    ct.where(col("text").isNotNull)
+      .groupBy("text").agg(array_sort(collect_list("conv_id")).as("cs"))
+      .select(col("cs"), posexplode(col("cs")).as(Seq("i", "src")))
+      .select(col("src"), explode(slice(col("cs"), col("i") + 2, size(col("cs")))).as("dst"))
+      .where(col("src") < col("dst"))
 }

@@ -192,17 +192,17 @@ object GraphQueries {
           |SELECT node, MIN(dist) AS dist FROM walk GROUP BY node""".stripMargin))
   )
 
-  /** Document-frequency cap applied to the overlap-graph text self-join
+  /** Document-frequency cap applied to overlap-graph edge building
     * (and mirrored in every derived oracle): texts shared by more than
     * this many conversations are dropped from edge building — the one
     * uncapped m² the engine had left ([[graft.ops.Overlap]]). 64 ≫ the
     * actual max df at test scale (3), so results are unchanged; at 100×
-    * one boilerplate error string can't quadratically blow up the join.
+    * one boilerplate error string can't quadratically blow up the pairs.
     */
   private val OverlapDfCap = graft.ops.Overlap.DefaultMaxDf
 
   /** Shared non-chain test graph: conversations (restricted to two users'
-    * prefixes to bound the self-join) connected when they share a turn
+    * prefixes to bound the pairs) connected when they share a turn
     * text — the q_conv_overlap edge set, symmetrization left to the
     * kernels. Returns (edges src/dst, node set).
     */
@@ -220,7 +220,7 @@ object GraphQueries {
     * persist() makes Spark's CacheManager substitute the one materialized
     * relation into every identical sub-plan across those queries in a
     * session (the tiny dimension-sized table is also a CollapseProject
-    * barrier for the self-joins above). Built once per (session, dir)
+    * barrier for the edge building above). Built once per (session, dir)
     * so repeated calls don't re-persist an identical plan (a handle leak
     * and an "already cached" warning in long-lived sessions).
     */

@@ -264,14 +264,14 @@ object TextQueries {
     // C4-style line-level dedup over the deterministically line-segmented
     // corpus (see [[linedDocs]]): first corpus-order occurrence of each
     // distinct line survives, documents reassemble from their survivors.
-    // Skew-safe shape: min(struct) group-by on the line digest (map-side
-    // combinable), NOT the row_number window the oracle uses.
+    // The first occurrence is a min(struct) window over the line digest,
+    // not the row_number window the oracle uses.
     QueryDef("q_line_dedup", (s, dir) => Dedup.lineDedup(linedDocs(s, dir)),
       // line dedup: the oracle re-derives the 8-token line segmentation
       // straight from the raw text with list slicing (no newline fixture
       // materialized anywhere), then takes first occurrence per distinct
       // line with the row_number window — semantically identical to the
-      // engine's skew-safe min(struct) group-by
+      // engine's min(struct) window
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t
         |            FROM documents),
         |lines AS (

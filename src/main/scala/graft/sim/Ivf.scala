@@ -31,8 +31,7 @@ import graft.functions.VecFunctions.vec_dot
   */
 object Ivf {
 
-  private def cos(a: Column, b: Column): Column =
-    vec_dot(a, b) / (sqrt(vec_dot(a, a)) * sqrt(vec_dot(b, b)))
+  private def cos(a: Column, b: Column): Column = Knn.cosine(a, b)
 
   /** Train `nClusters` spherical-k-means centroids (cosine assignment,
     * per-dimension mean update, `iters` Lloyd rounds) on a deterministic
@@ -44,8 +43,8 @@ object Ivf {
     * `spark.driver.maxResultSize`), time in that times `nClusters × iters`;
     * only the sample's TakeOrdered scales with the corpus. The rounds
     * match [[assign]] (its cosine; NaN above every number;
-    * ties to the lowest cluster_id; a zero-norm divisor, where SQL
-    * division gives null or fails, ranks below every number) and a
+    * ties to the lowest cluster_id; a zero-norm divisor, where
+    * [[Knn.cosineOf]] gives null, ranks below every number) and a
     * double `avg` per dimension cast to float. Clusters that lose all
     * members in a round keep their previous centroid (a silently
     * shrinking centroid table would degrade nprobe recall with no
@@ -263,8 +262,8 @@ object Ivf {
       .withColumn("q_norm", sqrt(vec_dot(col("q_vec"), col("q_vec"))))
     val cv = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec"))
       .withColumn("nbr_norm", sqrt(vec_dot(col("nbr_vec"), col("nbr_vec"))))
-    val sim = (vec_dot(col("q_vec"), col("nbr_vec")) /
-      (col("q_norm") * col("nbr_norm"))).as("sim")
+    val sim = Knn.cosineOf(vec_dot(col("q_vec"), col("nbr_vec")),
+                           col("q_norm"), col("nbr_norm")).as("sim")
     val rankKey =
       if (simDecimals >= 0) round(col("sim"), simDecimals) else col("sim")
     val scored = cv.join(cands, Seq("nbr_id"))

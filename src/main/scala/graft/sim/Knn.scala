@@ -23,7 +23,14 @@ object Knn {
 
   def norm(a: Column): Column = sqrt(vec_dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = vec_dot(a, b) / (norm(a) * norm(b))
+  def cosine(a: Column, b: Column): Column = cosineOf(vec_dot(a, b), norm(a), norm(b))
+
+  /** `dot / (na · nb)`, null when the divisor is zero (a zero vector),
+    * where plain division throws DIVIDE_BY_ZERO under ANSI. The one
+    * cosine of the similarity kernels, so a zero vector ranks alike in
+    * all of them.
+    */
+  def cosineOf(dot: Column, na: Column, nb: Column): Column = try_divide(dot, na * nb)
 
   /** Brute-force cosine top-k: every query row against every corpus row.
     * The query side should be small (it is broadcast); ties broken by
@@ -41,8 +48,8 @@ object Knn {
       .withColumn("nbr_norm", norm(col("nbr_vec")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("q_norm", norm(col("q_vec")))
-    val sim = (vec_dot(col("q_vec"), col("nbr_vec")) /
-      (col("q_norm") * col("nbr_norm"))).as("sim")
+    val sim = cosineOf(vec_dot(col("q_vec"), col("nbr_vec")),
+                       col("q_norm"), col("nbr_norm")).as("sim")
     val rankKey =
       if (simDecimals >= 0) round(col("sim"), simDecimals) else col("sim")
     val scored = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
@@ -156,13 +163,14 @@ object Knn {
     c.join(cands, Seq("nbr_id"))
       .join(q, Seq("query_id"))
       .select(col("query_id"), col("nbr_id"),
-              (vec_dot(col("q_vec"), col("nbr_vec")) /
-                (col("q_norm") * col("nbr_norm"))).as("sim"))
-      // NaN sims (zero-norm vectors) are dropped BEFORE ranking so this
-      // path agrees with TopKByScore (brute/IVF), which skips NaN keys —
-      // a NaN would otherwise sort FIRST under desc in the window (and in
-      // a SQL oracle), making the three cross-validated paths disagree
-      .where(!isnan(col("sim")))
+              cosineOf(vec_dot(col("q_vec"), col("nbr_vec")),
+                       col("q_norm"), col("nbr_norm")).as("sim"))
+      // NaN sims (a NaN component) and null sims (a zero vector) are
+      // dropped BEFORE ranking so this path agrees with TopKByScore
+      // (brute/IVF), which skips NaN and null keys — a NaN would
+      // otherwise sort FIRST under desc in the window (and in a SQL
+      // oracle), making the three cross-validated paths disagree
+      .where(col("sim").isNotNull && !isnan(col("sim")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(key.desc, col("nbr_id").asc)))
       .where(col("rank") <= k)

@@ -68,9 +68,7 @@ object IncrementalIvf {
     vecs.select(col("vec_id").as("id"), col("embedding").as("v"))
       .crossJoin(broadcast(centroids))
       .select(col("id"), col("cluster_id"),
-              round(Knn.dot(col("v"), col("centroid")) /
-                    (Knn.norm(col("v")) * Knn.norm(col("centroid"))), 6)
-                .as("sim6"))
+              round(Knn.cosine(col("v"), col("centroid")), 6).as("sim6"))
       .groupBy("id")
       .agg(expr("max_by(cluster_id, struct(sim6, -cluster_id))")
              .as("cluster_id"),

@@ -13,10 +13,15 @@ import org.apache.spark.sql.functions._
   * Scale shape: ONE pass over the corpus computes every per-doc flag
   * (lang, quality, fingerprint) as codegen'd column expressions; the
   * exact-dedup keeper is a single window over the fingerprint shuffle —
-  * the only corpus-sized shuffle in the funnel; the near-dup drop list is
-  * derived from the (tiny) verified pair graph and broadcast back. The
-  * final stage counts are conditional aggregates of that one flagged
-  * relation — no per-stage rescans of the corpus.
+  * the only corpus-sized shuffle in the funnel. The near-dup stage reads
+  * sizes from that flagged relation: the survivor-restricted pairs, with
+  * both ends' sizes, come to the driver in one bounded collect, and
+  * union-find plus [[Dedup.clusterMembers]]' keeper rule yield the drops'
+  * count and bytes (above the bound, the component kernel and a keeper
+  * window do, and one aggregate returns the same two numbers). The final
+  * stage counts are conditional aggregates of the flagged relation, the
+  * near-dup stage the exact stage less the drops — no per-stage rescans
+  * of the corpus and no join back.
   */
 object CorpusFilter {
 
@@ -55,34 +60,31 @@ object CorpusFilter {
         col(idCol) === min(when(col("ok_lang") && col("ok_quality"),
                                 col(idCol))).over(fpW))
       // materialized once: the flag relation feeds BOTH the near-dup
-      // restriction (via the component kernel's own materialization) and
-      // the final stage-count aggregate — without the barrier the second
+      // restriction (with its sizes) and the final stage-count
+      // aggregate — without the barrier the second
       // consumer re-paid the corpus scan + quality/lang columns + the
       // fingerprint window. This is the funnel's natural materialization
       // point at any scale (one row of flags per doc).
       .localCheckpoint(true)
-    val sur3 = flagged
-      .where(col("ok_lang") && col("ok_quality") && col("ok_exact"))
-      .select(col(idCol))
-    val restricted = nearDupPairs
-      .join(sur3.withColumnRenamed(idCol, "id_a"), "id_a")
-      .join(sur3.withColumnRenamed(idCol, "id_b"), "id_b")
-      .select("id_a", "id_b")
-    val drops = Dedup.clusterMembers(restricted, docs, idCol, textCol)
-      .where(!col("is_keeper"))
-      .select(col(idCol), lit(true).as("nd_drop"))
-    val f = flagged.join(broadcast(drops), Seq(idCol), "left")
     val s1 = col("ok_lang")
     val s2 = s1 && col("ok_quality")
     val s3 = s2 && col("ok_exact")
-    val s4 = s3 && col("nd_drop").isNull
+    // the near-dup drops are exact-stage survivors, so the last stage is
+    // the third less their count and bytes
+    val survivors = flagged.where(s3).select(col(idCol), col("n_bytes"))
+    val sized = Dedup.sizedPairs(nearDupPairs, survivors, idCol, "inner")
+    val (nDrop, bDrop) = Dedup.membersOnDriver(sized).fold(loopDrops(sized, idCol)) { ms =>
+      val drops = ms.filterNot(_.keeper)
+      (drops.length.toLong, drops.map(_.nBytes.toLong).sum)
+    }
     def n(c: Column) = count(when(c, 1))
     def b(c: Column) = sum(when(c, col("n_bytes")))
-    f.agg(count(lit(1)).as("n0"), sum("n_bytes").as("b0"),
+    flagged.agg(count(lit(1)).as("n0"), sum("n_bytes").as("b0"),
           n(s1).as("n1"), b(s1).as("b1"),
           n(s2).as("n2"), b(s2).as("b2"),
-          n(s3).as("n3"), b(s3).as("b3"),
-          n(s4).as("n4"), b(s4).as("b4"))
+          n(s3).as("n3"), b(s3).as("b3"))
+      .withColumn("n4", col("n3") - nDrop)
+      .withColumn("b4", col("b3") - bDrop)
       .select(expr("""stack(5,
           0, 'total',       n0, CAST(b0 AS BIGINT),
           1, 'lang',        n1, CAST(b1 AS BIGINT),
@@ -90,5 +92,14 @@ object CorpusFilter {
           3, 'exact_dedup', n3, CAST(b3 AS BIGINT),
           4, 'near_dedup',  n4, CAST(b4 AS BIGINT))
         AS (stage_idx, stage, n_docs, n_bytes)"""))
+  }
+
+  /** The near-dup drops' count and bytes above the driver bound: one
+    * aggregate over [[Dedup.clusterMembersLoop]]'s non-keepers.
+    */
+  private[graft] def loopDrops(sized: DataFrame, idCol: String): (Long, Long) = {
+    val d = Dedup.clusterMembersLoop(sized, idCol).where(!col("is_keeper"))
+      .agg(count(lit(1)), coalesce(sum("n_bytes"), lit(0L))).head()
+    (d.getLong(0), d.getLong(1))
   }
 }

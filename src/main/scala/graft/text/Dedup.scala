@@ -1,8 +1,14 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
+
+import graft.graph.{Graph, UnionFind}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * group-by), MinHash+LSH, SimHash, and n-gram Jaccard verification.
@@ -234,12 +240,7 @@ object Dedup {
     * cluster with the canonical keeper (longest text, ties → lowest id)
     * and the bytes a keep-one-per-cluster dedup pass saves. This is the
     * cluster-level shape a training-data pipeline actually deletes by.
-    *
-    * Numeric ids ride the component kernel as ZERO-PADDED strings so the
-    * kernel's lexicographic min-label IS the numeric min; the label is
-    * cast back for output. Scale: the pair graph is tiny relative to the
-    * corpus (near-dup pairs only), components run on it — never on the
-    * corpus — and the single corpus-sized join fetches keeper lengths.
+    * The members come from [[clusterMembers]].
     */
   def clustersFromPairs(pairs: DataFrame, docs: DataFrame,
                         idCol: String = "doc_id",
@@ -252,26 +253,101 @@ object Dedup {
       .select(col("cluster_id"), col("n_docs"), col("keep_id"),
               col("dup_bytes"))
 
-  /** The per-member view [[clustersFromPairs]] rolls up: (cluster_id,
-    * idCol, n_bytes, is_keeper) — one row per clustered doc, exactly one
+  /** The per-member view [[clustersFromPairs]] rolls up: (idCol,
+    * cluster_id, n_bytes, is_keeper) — one row per clustered doc, exactly one
     * keeper per cluster (longest text, ties → lowest id). The filter
     * shape a pipeline deletes with: `where(!is_keeper)` is the drop list.
+    * A cluster's id is its member whose `%012d`-padded id is least in
+    * string order (the numeric minimum for ids in [0, 10¹²)).
+    *
+    * Scale shape: the pair graph is tiny relative to the corpus
+    * (near-dup pairs only). The pairs, each end sized by one join
+    * against `octet_length(docs)`, are collected once when at most
+    * [[Graph.BroadcastFrontierRows]] of them exist, and
+    * union-find plus the keeper rule run on the driver
+    * ([[membersOnDriver]]); more pairs go through
+    * [[Graph.connectedComponents]] and a keeper window
+    * ([[clusterMembersLoop]]). A pair end absent from `docs` still links
+    * its cluster but is not a member row, as with an inner join.
     */
   def clusterMembers(pairs: DataFrame, docs: DataFrame,
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
+    val sizes = docs.select(col(idCol), octet_length(col(textCol)).as("n_bytes"))
+    val sized = sizedPairs(pairs, sizes, idCol, "left")
+    membersOnDriver(sized).fold(clusterMembersLoop(sized, idCol))(
+      membersFrame(pairs.sparkSession, _, idCol))
+  }
+
+  /** (id_a, id_b, n_a, n_b): each pair with both ends' sizes from `sizes`
+    * (idCol, n_bytes), joined `how` ("inner" keeps only pairs whose both
+    * ends are sized).
+    */
+  private[graft] def sizedPairs(pairs: DataFrame, sizes: DataFrame, idCol: String,
+                                how: String): DataFrame = {
+    def side(id: String, n: String) =
+      sizes.select(col(idCol).as(id), col("n_bytes").as(n))
+    pairs.select("id_a", "id_b")
+      .join(side("id_a", "n_a"), Seq("id_a"), how)
+      .join(side("id_b", "n_b"), Seq("id_b"), how)
+      .select("id_a", "id_b", "n_a", "n_b")
+  }
+
+  /** One row of [[clusterMembers]]. */
+  private[graft] final case class Member(id: Long, cluster: Long, nBytes: Int, keeper: Boolean)
+
+  /** [[clusterMembers]] on the driver from sized pairs: one collect of at
+    * most [[Graph.BroadcastFrontierRows]] + 1 rows; None when
+    * there are more pairs than that. Pairs with a null end are skipped,
+    * as an equi-join would skip them.
+    */
+  private[graft] def membersOnDriver(sized: DataFrame): Option[Seq[Member]] = {
+    val bound = Graph.BroadcastFrontierRows
+    val got = sized.limit((bound + 1).toInt).collect()
+    Option.when(got.length <= bound) {
+      val uf = new UnionFind[Long]
+      val nodes = mutable.LinkedHashSet.empty[Long]
+      val size = mutable.HashMap.empty[Long, Int]
+      for (r <- got if !r.isNullAt(0) && !r.isNullAt(1)) {
+        val (a, b) = (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+        uf.union(a, b)
+        nodes += a += b
+        if (!r.isNullAt(2)) size(a) = r.getInt(2)
+        if (!r.isNullAt(3)) size(b) = r.getInt(3)
+      }
+      nodes.toSeq.groupBy(uf.root).values.toSeq.flatMap { ms =>
+        val label = ms.minBy(padded)
+        val sized = ms.filter(size.contains)
+        sized.minByOption(id => (-size(id), id)).toSeq.flatMap(keeper =>
+          sized.map(id => Member(id, label, size(id), id == keeper)))
+      }
+    }
+  }
+
+  private def padded(id: Long): String = "%012d".formatLocal(java.util.Locale.ROOT, id)
+
+  private def membersFrame(spark: SparkSession, ms: Seq[Member], idCol: String): DataFrame =
+    spark.createDataFrame(ms.map(m => Row.fromSeq(m.productIterator.toSeq)).asJava,
+      StructType(Seq(StructField(idCol, LongType), StructField("cluster_id", LongType),
+                     StructField("n_bytes", IntegerType),
+                     StructField("is_keeper", BooleanType, nullable = false))))
+
+  /** [[clusterMembers]] over sized pairs at any size: components over the
+    * zero-padded ids (the kernel's string min-label is the cluster id),
+    * then the keeper window.
+    */
+  private[graft] def clusterMembersLoop(sized: DataFrame, idCol: String): DataFrame = {
     def pad(c: Column) = format_string("%012d", c)
-    val edges = pairs.select(pad(col("id_a")).as("src"),
-                             pad(col("id_b")).as("dst"))
-    val members = graft.graph.Graph.connectedComponents(edges)
+    val edges = sized.select(pad(col("id_a")).as("src"), pad(col("id_b")).as("dst"))
+    val members = Graph.connectedComponents(edges)
       .select(col("label").cast("long").as("cluster_id"),
               col("node").cast("long").as(idCol))
-    val keeperOrder = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id")
+    val sizes = sized.select(col("id_a").as(idCol), col("n_a").as("n_bytes"))
+      .union(sized.select(col("id_b").as(idCol), col("n_b").as("n_bytes")))
+      .where(col("n_bytes").isNotNull).distinct()
+    val keeperOrder = Window.partitionBy("cluster_id")
       .orderBy(col("n_bytes").desc, col(idCol).asc)
-    members.join(
-        docs.select(col(idCol), octet_length(col(textCol)).as("n_bytes")),
-        idCol)
+    members.join(sizes, idCol)
       .withColumn("is_keeper", row_number().over(keeperOrder) === 1)
   }
 
@@ -329,7 +405,7 @@ object Dedup {
       .join(v.select(col("vid").as("id_b"), col("vv").as("vb"),
                      col("vn").as("nb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-              (Knn.dot(col("va"), col("vb")) / (col("na") * col("nb")))
+              Knn.cosineOf(Knn.dot(col("va"), col("vb")), col("na"), col("nb"))
                 .as("cosine"))
       .where(col("cosine") >= threshold)
   }
@@ -379,7 +455,7 @@ object Dedup {
       .join(v.select(col("vid").as("id_b"), col("vv").as("vb"),
                      col("vn").as("nb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-              round(Knn.dot(col("va"), col("vb")) / (col("na") * col("nb")),
+              round(Knn.cosineOf(Knn.dot(col("va"), col("vb")), col("na"), col("nb")),
                     3).as("cos3"))
       .where(col("cos3") >= threshold)
       .groupBy(col("id_b").as("id"))
@@ -460,29 +536,25 @@ object Dedup {
     * re-joined by `delim` ('' when every line was seen earlier).
     *
     * Scale shape: two shuffles on the exploded line relation. The
-    * first-occurrence computation is a `min(struct(id, line_idx))`
-    * GROUP BY on the md5 line digest — map-side combinable, so the
-    * boilerplate line that appears 10⁹ times collapses to one row per
-    * map partition BEFORE the shuffle (the row_number()-window
-    * formulation the oracle uses would funnel every copy of a hot line
-    * through one task's sort — correct, but a skew bomb at corpus
-    * scale); the verdict join back is digest-keyed equi-join (AQE
-    * splits any residual hot digest). Reassembly is one id-keyed
-    * shuffle of the kept lines (`array_sort(collect_list(struct))` —
-    * per-doc line counts are bounded by document length).
+    * first occurrence is `min(struct(id, line_idx))` over a window
+    * partitioned by the md5 line digest, so each line learns its
+    * verdict inside the digest shuffle, with no join back onto the
+    * lines (a digest group-by would shuffle the lines a second time to
+    * meet its result). Every copy of a line meets in one task's sort; a
+    * boilerplate line repeated 10⁹ times is one hot task, where a
+    * map-side-combined group-by would not be. Reassembly is one id-keyed
+    * shuffle of the lines (`array_sort(collect_list(struct))` — per-doc
+    * line counts are bounded by document length).
     */
   def lineDedup(docs: DataFrame, idCol: String = "doc_id",
                 textCol: String = "text", delim: String = "\n")
       : DataFrame = {
-    val lines = docs.select(col(idCol),
+    val first = min(struct(col(idCol), col("line_idx")))
+      .over(Window.partitionBy(md5(col("line"))))
+    docs.select(col(idCol),
         posexplode(split(col(textCol),
           java.util.regex.Pattern.quote(delim))).as(Seq("line_idx", "line")))
-      .withColumn("lk", md5(col("line")))
-    val first = lines.groupBy("lk")
-      .agg(min(struct(col(idCol), col("line_idx"))).as("first_occ"))
-    lines.join(first, "lk")
-      .withColumn("keep",
-        struct(col(idCol), col("line_idx")) === col("first_occ"))
+      .withColumn("keep", struct(col(idCol), col("line_idx")) === first)
       .groupBy(idCol)
       .agg(
         count(lit(1)).cast("int").as("n_lines"),

@@ -3,13 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+/** Shared local session for all suites (one JVM-wide session, lazy).
+  * The JVM-wide codegen cache holds every class the suites generate
+  * (Spark's default keeps 100 and recompiles the rest).
+  */
 object SparkSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

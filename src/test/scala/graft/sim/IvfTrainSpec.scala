@@ -42,4 +42,25 @@ class IvfTrainSpec extends SparkSuite {
       assert(bits(centroids(got)) == bits(centroids(want)), s"iters=$iters")
     }
   }
+
+  test("a (0, 0) vector: assign gives no error and agrees with trainCentroids") {
+    // the zero vector's cosine has a zero divisor: null for assign (below
+    // every number), -inf for the driver rounds; both put it in the lowest
+    // cluster_id, in every Lloyd round and in the final assignment
+    val vecs = Seq((0L, Seq(0f, 0f)), (1L, Seq(1f, 0f)), (2L, Seq(0.9f, 0.1f)),
+                   (3L, Seq(0f, 1f)), (4L, Seq(0.1f, 0.9f)), (5L, Seq(0f, 0f)))
+      .toDF("vec_id", "embedding")
+    for (iters <- Seq(1, 3)) {
+      val got = Ivf.trainCentroids(vecs, nClusters = 2, iters = iters, sampleFactor = 3)
+      val want = SparkLloyd.trainCentroids(vecs, nClusters = 2, iters = iters,
+                                           sampleFactor = 3)
+      assert(bits(centroids(got)) == bits(centroids(want)), s"iters=$iters")
+      val assigned = Ivf.assign(vecs.select($"vec_id".as("id"), $"embedding".as("v")), got)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(assigned(0L) == 1 && assigned(5L) == 1, s"iters=$iters: $assigned")
+      assert(assigned.size == 6)
+    }
+    assert(vecs.select(Knn.cosine($"embedding", $"embedding")).collect()
+      .map(r => Option(r.get(0))).count(_.isEmpty) == 2)
+  }
 }

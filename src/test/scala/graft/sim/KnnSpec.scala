@@ -36,6 +36,17 @@ class KnnSpec extends SparkSuite {
     }
   }
 
+  test("zero vectors: brute and LSH top-k skip their null cosines alike") {
+    val zeros = Seq((900L, Seq.fill(8)(0f)), (901L, Seq.fill(8)(0f))).toDF("vec_id", "embedding")
+    val c = vecs.union(zeros)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
+    val brute = ids(Knn.bruteTopK(c, c, 3, simDecimals = 6))
+    val lsh = ids(Knn.lshTopKFromSigs(c, Knn.lshSignatures(c), 3, simDecimals = 6))
+    for (got <- Seq(brute, lsh))
+      assert(got.nonEmpty && !got.exists { case (q, n) => q >= 900 || n >= 900 })
+  }
+
   test("cosine self-similarity is 1.0") {
     val s = vecs.limit(1).select(
       Knn.cosine(col("embedding"), col("embedding")).as("s")).head().getDouble(0)

@@ -4,9 +4,8 @@ import graft.SparkSuite
 
 /** Contracts for C4-style line-level dedup: first-corpus-order
   * occurrence survives, ordered reassembly, fully-duplicated documents
-  * collapse to empty text, and the plan shape (first-occurrence is the
-  * map-side-combinable min(struct) aggregate — NO per-line-key window
-  * sort anywhere in the plan).
+  * collapse to empty text, and the plan shape (first occurrence is a
+  * window inside the line-digest shuffle: two shuffles, no join back).
   */
 class LineDedupSpec extends SparkSuite {
   import spark.implicits._
@@ -42,12 +41,13 @@ class LineDedupSpec extends SparkSuite {
     assert(out.toSeq == Seq((0L, 2, 2, "a||b"), (1L, 2, 1, "c")))
   }
 
-  test("plan: no window over the line relation (skew-safe min(struct))") {
+  test("plan: first occurrence rides the digest shuffle, no join back") {
     val df = Dedup.lineDedup(docs)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    assert(!plan.toLowerCase.contains("windowspecdefinition"),
-      s"line dedup must not sort per-line-key windows:\n$plan")
+    assert(!plan.contains("Join"), s"line dedup must not join back:\n$plan")
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 2,
+      s"one digest and one id shuffle:\n$plan")
   }
 }
